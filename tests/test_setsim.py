@@ -154,6 +154,20 @@ def test_null_text_and_null_source(spark):
     assert got == [(2, 3, 1.0)]
 
 
+def test_null_token_falls_back_to_array_path(spark):
+    # a null element in a token set has no bit in the vocabulary mask:
+    # the probe must send the corpus down the array path, not raise
+    docs = spark.createDataFrame(
+        [(1, "s", ["a", "b", None]), (2, "s", ["a", "b"]),
+         (3, "s", ["a", "b", "c"]), (4, "s", ["x"])],
+        "doc_id long, source string, tset array<string>",
+    )
+    kw = dict(id_col="doc_id", group_col="source", threshold=0.5)
+    want = _rows(jaccard_similarity_join(docs, bitset_vocab_cap=0, **kw))
+    assert want == [(1, 2, 0.6667), (1, 3, 0.5), (2, 3, 0.6667)]
+    assert _rows(jaccard_similarity_join(docs, **kw)) == want
+
+
 def test_no_group_column(spark):
     # group_col=None: pairs across the whole corpus
     docs = _mk(spark, [

@@ -75,11 +75,6 @@ def propagate_labels(
     :class:`CCNotConverged` if max_iters rounds were not enough
     (2^max_iters-hop reach — unreachable in practice).
     """
-    import os as _os
-    import time as _time
-
-    _trace = _os.environ.get("UMI_CC_TRACE") == "1"
-    _t0 = _time.time()
     # localCheckpoint blocks have NO public release API (DataFrame
     # .unpersist only touches the SQL cache), and the ContextCleaner only
     # reclaims them after a JVM GC notices the RDD is unreachable — in a
@@ -102,8 +97,6 @@ def propagate_labels(
     # of the 3.6s labels stage at bench scale; round 0 consumes `labels`
     # twice, and a lazy localCheckpoint still computes its blocks once)
     labels = labels.localCheckpoint(eager=False)
-    if _trace:
-        print(f"[cc] init checkpoint {_time.time() - _t0:.2f}s", flush=True)
 
     # the hop side is invariant across rounds: partition + sort it by src
     # ONCE and snapshot it as a LEAF (localCheckpoint -> LogicalRDD, which
@@ -130,8 +123,6 @@ def propagate_labels(
         .localCheckpoint(eager=False)
     )
 
-    if _trace:
-        print(f"[cc] edges_by_src built {_time.time() - _t0:.2f}s (cumulative)", flush=True)
     iters = 0
     converged = False
     try:
@@ -165,8 +156,6 @@ def propagate_labels(
                 # (Skipping map-side partial agg is free here: this branch
                 # only fires when the working set is small.)
                 upd = upd.repartition(num_partitions, "fam")
-            if _trace:
-                print(f"[cc] r{it} plan-a {_time.time() - _t0:.2f}s", flush=True)
             best = upd.groupBy("fam").agg(F.min("lbl").alias("new_lbl"))
             new_labels = (
                 labels.join(best, "fam", "left")
@@ -181,12 +170,7 @@ def propagate_labels(
                 )
                 .localCheckpoint(eager=False)
             )
-            if _trace:
-                print(f"[cc] r{it} plan-b {_time.time() - _t0:.2f}s", flush=True)
-            _t0 = _time.time()
             changed = new_labels.agg(F.max("chg")).collect()[0][0]
-            if _trace:
-                print(f"[cc] round {it} {_time.time() - _t0:.2f}s chg={changed}", flush=True)
             labels = new_labels.select("fam", "lbl")
             if not changed:
                 converged = True

@@ -105,7 +105,8 @@ def _small_universe_vocab(
     2000-doc sample — real text exceeds ``vocab_cap`` here and exits;
     (2) incremental doc-count check against ``build_cap`` (CollectLimit
     scans partitions incrementally, not the whole input); (3) the full
-    distinct-token scan, only when both cheap probes pass."""
+    distinct-token scan, only when both cheap probes pass. A null token
+    has no bit of its own, so it disqualifies the bitset path too."""
     sample_vocab = (
         base.select("_tset").limit(2000)
         .select(F.explode("_tset").alias("_tok")).distinct().count()
@@ -118,9 +119,10 @@ def _small_universe_vocab(
         base.select(F.explode("_tset").alias("_tok"))
         .distinct().limit(vocab_cap + 1).collect()
     )
-    if len(rows) > vocab_cap:
+    toks = [r["_tok"] for r in rows]
+    if len(toks) > vocab_cap or None in toks:
         return None
-    return sorted(r["_tok"] for r in rows)
+    return sorted(toks)
 
 
 def _bitset_join(

@@ -131,12 +131,7 @@ class DedupPipeline:
         path = self._ckpt_path(stage)
         if path and resume and dio.stage_complete(path, self.cfg):
             return dio.read_table(self.spark, path)
-        _trace = os.environ.get("UMI_STAGE_TRACE") == "1"
-        _t0 = time.time()
         df = df_fn()
-        if _trace:
-            print(f"[stage {stage}] construct {time.time() - _t0:.2f}s", flush=True)
-            _t0 = time.time()
         if path:
             dio.write_table(df, path, stage=stage, config=self.cfg)
             df = dio.read_table(self.spark, path)
@@ -158,8 +153,6 @@ class DedupPipeline:
             # downstream toRdd/action pay whole-pipeline Catalyst
             # analysis (see _plan_leaf)
             df = _plan_leaf(df)
-        if _trace:
-            print(f"[stage {stage}] materialize {time.time() - _t0:.2f}s", flush=True)
         self.lineage.append(partition_lineage(df, stage))
         return df
 
@@ -249,11 +242,11 @@ class DedupPipeline:
         # Materialized eagerly (it is tiny — one row per oversized bucket)
         # so the shared bucket exchange cache can be released right after.
         over_path = self._ckpt_path("pairs_overflow")
-        if over_path and resume and dio.stage_complete(over_path, cfg):
-            self.metrics_overflow = dio.read_table(self.spark, over_path)
-        elif self._overflow_raw is not None:
-            self.metrics_overflow = self._stage(
-                "pairs_overflow", lambda: self._overflow_raw, resume
+        if self._overflow_raw is not None or (
+            over_path and resume and dio.stage_complete(over_path, cfg)
+        ):
+            self.metrics_overflow = timed(
+                "pairs_overflow", lambda: self._overflow_raw
             )
         # both consumers of the bucket exchange are materialized — release
         # the cache (otherwise every run leaks one dataset in storage)

@@ -15,6 +15,54 @@ from pyspark.sql import SparkSession
 _DRIVER_OPTS_KEY = "spark.driver.extraJavaOptions"
 
 
+# Fraction of host memory one driver JVM's heap may take: leaves room for
+# a second JVM (the spark-submit test), the Python UDF workers and the
+# JVM's off-heap use on the same host.
+_HEAP_HOST_FRACTION = 0.4
+
+# Compiled-class cache size (static conf spark.sql.codegen.cache.maxEntries;
+# Spark's default of 100 is smaller than one pipeline run, so a rerun in
+# the same session recompiled everything). Measured on a 4-CPU host,
+# local[4], cap raised to 5000, counting CodegenMetrics compiles from a
+# cold JVM, with the stage id kept out of class names (as get_spark
+# sets): the full __spark_entry__.queries() table on sf0.01 compiles
+# 574 classes; one pipeline run on make_pages(300) compiles 207 (naive),
+# 288 (weighted_average), 290 (weighted_average2) and 291 (cluster), each
+# in its own JVM. Sum 1,650; the cap is over twice that. (All five in one
+# session compile 747 distinct classes; a second pass then adds 10.)
+CODEGEN_CACHE_MAX_ENTRIES = 4000
+
+
+def _cgroup_mem_limit_bytes() -> int | None:
+    """The cgroup memory limit (v2 memory.max, else v1
+    memory.limit_in_bytes); None when unlimited or unreadable."""
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            return int(raw)
+    return None
+
+
+def _host_mem_bytes() -> int:
+    """min(MemTotal, cgroup memory limit): the memory this process can get."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    limit = _cgroup_mem_limit_bytes()
+    return min(total, limit) if limit else total
+
+
+def driver_heap_mb(host_mem_bytes: int) -> int:
+    """Default driver heap (-Xmx) in MiB: ``_HEAP_HOST_FRACTION`` of the
+    host's memory, at least 1 MiB, never more than the host has."""
+    return max(1, int(host_mem_bytes * _HEAP_HOST_FRACTION) >> 20)
+
+
 def _available_mem_bytes() -> int | None:
     """MemAvailable from /proc/meminfo (Linux); None if unreadable."""
     try:
@@ -32,20 +80,22 @@ def _parse_size_bytes(s: str) -> int:
     return int(s[:-1]) * mult if mult else int(s)
 
 
-def _driver_java_opts(extra_conf: dict[str, str] | None) -> str:
+def _driver_java_opts(extra_conf: dict[str, str] | None, heap: str) -> str:
     """Compose the pre-touch defaults with caller-supplied JVM opts.
 
     The Xms/AlwaysPreTouch pair is only injected when the host has
     comfortably more available memory than the Xms target (1.5x headroom)
-    — on a small host the un-touched lazy heap is strictly safer.
+    — on a small host the un-touched lazy heap is strictly safer. Xms is
+    capped at the heap size ``heap`` (a JVM refuses Xms > Xmx).
     SPARK_DRIVER_XMS=0 disables the pre-touch explicitly.
     """
     xms = os.environ.get("SPARK_DRIVER_XMS", "8g")
     parts = []
     if xms not in ("0", "", "none"):
+        xms_bytes = min(_parse_size_bytes(xms), _parse_size_bytes(heap))
         avail = _available_mem_bytes()
-        if avail is None or avail >= int(_parse_size_bytes(xms) * 1.5):
-            parts.append(f"-Xms{xms} -XX:+AlwaysPreTouch")
+        if avail is None or avail >= int(xms_bytes * 1.5):
+            parts.append(f"-Xms{xms_bytes >> 20}m -XX:+AlwaysPreTouch")
     env_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTS", "")
     if env_opts:
         parts.append(env_opts)
@@ -85,6 +135,7 @@ def get_spark(
     master = f"local[{parallelism if parallelism is not None else cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32 if parallelism is None else max(parallelism, 8)
+    heap = os.environ.get("SPARK_DRIVER_MEM") or f"{driver_heap_mb(_host_mem_bytes())}m"
 
     builder = (
         SparkSession.builder.master(master)
@@ -96,23 +147,34 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # heap from the host (SPARK_DRIVER_MEM overrides): a heap that can
+        # outgrow the host's RAM gets the JVM OOM-killed mid-session
+        .config("spark.driver.memory", heap)
         # Pre-touch the initial heap (-Xms + AlwaysPreTouch): this host's
         # fresh-page first-touch degrades ~75-100x intermittently
         # (BENCH/host_probe.py; a sustained-copy probe measured 0.4-5 GB/s
         # for the first ~35s of fresh allocations vs 65 GB/s steady). A
         # growing heap re-pays that tax inside text-heavy stages — at 500k
         # synth docs it inflated the pipeline 425s -> 90s when fixed.
-        # Xms is deliberately smaller than Xmx: pre-touching all 48g cost
-        # 277s in one degraded window; 8g covers the working set of the
-        # bench sizes and keeps worst-case session startup bounded. On a
+        # Xms is deliberately smaller than a large Xmx: pre-touching all
+        # 48g cost 277s in one degraded window; 8g covers the working set
+        # of the bench sizes and keeps worst-case session startup bounded
+        # (and is capped at the heap on smaller hosts). On a
         # real cluster this is spark.executor.extraJavaOptions. The
         # pre-touch default is GATED on free memory (hosts with less
         # available than the Xms target would stall or OOM at JVM start)
         # and composed with — not clobbered by — any caller opts (env var
         # and extra_conf both merge; extra_conf wins on duplicate flags
         # because the JVM takes the last occurrence).
-        .config("spark.driver.extraJavaOptions", _driver_java_opts(extra_conf))
+        .config("spark.driver.extraJavaOptions", _driver_java_opts(extra_conf, heap))
+        # static conf: CodeGenerator reads it once, when the JVM first
+        # generates code, so it only takes effect at session start
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        # keep the whole-stage-codegen stage id out of the generated class
+        # name: AQE numbers stages in re-planning order, which varies run
+        # to run, so with the id in the name an identical stage compiled
+        # under a new number misses the cache (the id stays in a comment)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Scan-parallelism floor (scale-adaptive, r6): a small parquet
         # input (the 6MB documents table) packs into 1-2 splits at the
