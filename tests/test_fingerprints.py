@@ -5,7 +5,6 @@ from __future__ import annotations
 import numpy as np
 
 from umi_dedup_spark.functions.hashing import (
-    MERSENNE31,
     minhash_signature,
     shingle_hashes,
     simhash64,

@@ -1,9 +1,12 @@
-"""Session sizing: the driver heap comes from the host's memory, and the
+"""Session sizing: the driver heap comes from the host's memory, the
 codegen class cache is large enough that re-running a pipeline in one
-session reuses its compiled classes."""
+session reuses its compiled classes, and under-split scans are spread
+across the task slots."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from umi_dedup_spark import session
@@ -86,3 +89,32 @@ def test_pipeline_rerun_reuses_compiled_classes(spark):
     assert first > 100
     assert cache.size() >= first
     assert second <= 0.1 * first, (first, second)
+
+
+def _n_exchanges(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+
+def test_spread_small_scan_spreads_one_row_group(spark, tmp_path):
+    path = str(tmp_path / "one_group.parquet")
+    pq.write_table(pa.table({"id": list(range(1000))}), path)
+    df = spark.read.parquet(path)
+    slots = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() < slots
+    out = session.spread_small_scan(df)
+    assert out.rdd.getNumPartitions() == slots
+    assert sorted(r["id"] for r in out.collect()) == list(range(1000))
+
+
+@pytest.mark.parametrize("extra", [0, 3])
+def test_spread_small_scan_keeps_split_input(spark, extra):
+    slots = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 1000, 1, slots + extra)
+    out = session.spread_small_scan(df)
+    assert out is df
+    assert _n_exchanges(out) == 0
+
+
+def test_spread_small_scan_keeps_streaming_input(spark, tmp_path):
+    stream = spark.readStream.schema("id long").parquet(str(tmp_path))
+    assert session.spread_small_scan(stream) is stream

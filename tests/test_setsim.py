@@ -181,27 +181,12 @@ def test_no_group_column(spark):
     assert got == [(1, 2, 1.0)]
 
 
-def test_caches_released(spark):
-    docs = _mk(spark, [(1, "s", "a b"), (2, "s", "a b c")])
-    caches: list = []
-    out = jaccard_similarity_join(
-        _tset(docs), id_col="doc_id", group_col="source", caches=caches,
-        bitset_vocab_cap=0,
-    )
-    assert out.count() == 1
-    # base projection + prefix index (both multi-consumer)
-    assert len(caches) == 2 and all(c.is_cached for c in caches)
-    for c in caches:
-        c.unpersist()
-    assert not any(c.is_cached for c in caches)
-    # bitset path: only the base projection is multi-consumer
-    caches = []
-    out = jaccard_similarity_join(
-        _tset(docs), id_col="doc_id", group_col="source", caches=caches
-    )
-    assert out.count() == 1
-    assert len(caches) == 1 and caches[0].is_cached
-    caches[0].unpersist()
+def test_streaming_input_rejected(spark, tmp_path):
+    stream = spark.readStream.schema(
+        "doc_id long, source string, text string"
+    ).parquet(str(tmp_path))
+    with pytest.raises(ValueError, match="batch-only"):
+        jaccard_similarity_join(_tset(stream), id_col="doc_id", group_col="source")
 
 
 def test_bitset_path_properties(spark):

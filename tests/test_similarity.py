@@ -1,4 +1,5 @@
-"""Similarity-search operator tests: exact brute force vs LSH recall."""
+"""Similarity-search operator tests: exact brute force, IVF recall and
+SemDeDup marking."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ from umi_dedup_spark.operators.similarity import (
     semdedup_mark,
     brute_force_topk,
     ivf_topk,
-    lsh_bucketed_topk,
 )
 
 
@@ -48,32 +48,6 @@ def test_brute_force_matches_numpy(emb, spark):
     assert set(got) == set(int(t) for t in top)
 
 
-def test_lsh_recall_on_near_duplicate_regime(spark):
-    # hyperplane LSH prunes by angle; it is designed for the near-dup
-    # regime (cos >= ~0.9), not for weakly-similar corpora (the sf
-    # embeddings table has same-label mean cos ~= 0.002, where no LSH
-    # can beat brute force). Plant true near-dup vectors and require
-    # high recall on them.
-    rng = np.random.RandomState(0)
-    base = rng.normal(size=(60, 32))
-    rows = []
-    vid = 0
-    for i in range(60):
-        v = base[i] / np.linalg.norm(base[i])
-        rows.append((vid, [float(x) for x in v], i))
-        vid += 1
-        dup = v + rng.normal(scale=0.08, size=32)  # cos ~ 0.96
-        dup = dup / np.linalg.norm(dup)
-        rows.append((vid, [float(x) for x in dup], i))
-        vid += 1
-    emb2 = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    q = emb2.filter(F.col("vec_id") % 2 == 0)  # the 60 originals
-    approx = lsh_bucketed_topk(q, emb2, k=1, n_bits=8, n_tables=8).collect()
-    hits = sum(1 for r in approx if r["neighbor_id"] == r["query_id"] + 1)
-    recall = hits / 60
-    assert recall >= 0.9, f"LSH near-dup recall {recall}"
-
-
 def test_ivf_recall_on_near_duplicate_regime(spark):
     """IVF with sampled centroids: planted near-dups land in the same (or
     a probed) Voronoi cell; top-1 recall >= 0.9."""
@@ -92,38 +66,6 @@ def test_ivf_recall_on_near_duplicate_regime(spark):
     approx = ivf_topk(q, emb2, k=1, n_cells=16, nprobe=4).collect()
     hits = sum(1 for r in approx if r["neighbor_id"] == r["query_id"] + 1)
     assert hits / 80 >= 0.9, f"IVF near-dup recall {hits / 80}"
-
-
-def test_lsh_recall_at_10k_vectors(spark):
-    """Scale check: 10k corpus vectors with planted near-dups; LSH top-1
-    recall vs numpy brute-force ground truth must stay >= 0.9, and the
-    vectorized bucket UDF must handle full Arrow batches."""
-    rng = np.random.RandomState(7)
-    n_base, dim = 5000, 32
-    base = rng.normal(size=(n_base, dim))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    dup = base + rng.normal(scale=0.06, size=(n_base, dim))
-    dup /= np.linalg.norm(dup, axis=1, keepdims=True)
-    mat = np.empty((2 * n_base, dim))
-    mat[0::2] = base
-    mat[1::2] = dup
-
-    n_q = 64
-    q_ids = np.arange(0, 2 * n_q, 2)  # originals
-    sims = mat[q_ids] @ mat.T
-    sims[np.arange(n_q), q_ids] = -np.inf
-    truth = {int(q): int(np.argmax(sims[i])) for i, q in enumerate(q_ids)}
-
-    emb2 = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(2 * n_base)],
-        "vec_id long, embedding array<float>",
-    )
-    q = emb2.filter(F.col("vec_id") < 2 * n_q).filter(F.col("vec_id") % 2 == 0)
-    approx = lsh_bucketed_topk(q, emb2, k=1, n_bits=10, n_tables=8).collect()
-    got = {int(r["query_id"]): int(r["neighbor_id"]) for r in approx}
-    hits = sum(1 for qid, n in truth.items() if got.get(qid) == n)
-    recall = hits / n_q
-    assert recall >= 0.9, f"LSH recall@1 at 10k vectors: {recall}"
 
 
 # ------------------------------------------------------------------ semdedup

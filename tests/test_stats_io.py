@@ -1,19 +1,16 @@
-"""Tests for frequency-table IO (S5/S6), log aggregation (S7/J3),
-position histogram (G6), entropy, and library-size estimation (G10)."""
+"""Tests for frequency-table IO (S5/S6), position histogram (G6) and
+library-size estimation (G10)."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.io import read_frequency_table, write_frequency_table
 from umi_dedup_spark.operators.exact import exact_families, prepare_docs
 from umi_dedup_spark.operators.stats import (
-    aggregate_metric_logs,
-    cluster_entropy,
     estimate_library_size,
     lambert_w0,
     position_histogram,
@@ -44,14 +41,6 @@ def test_frequency_table_tolerates_malformed(spark, tmp_path):
     assert {(r["norm_hash"], r["fam_count"]) for r in df.collect()} == {(123, 4), (456, 7)}
 
 
-def test_aggregate_metric_logs(spark):
-    a = spark.createDataFrame([("x", 1), ("y", 2)], "category string, n long")
-    b = spark.createDataFrame([("x", 5), ("z", 9)], "category string, n long")
-    out = aggregate_metric_logs([("run_a", a), ("run_b", b)]).collect()
-    m = {r["category"]: (r["run_a"], r["run_b"]) for r in out}
-    assert m == {"x": (1, 5), "y": (2, None), "z": (None, 9)}
-
-
 def test_position_histogram(spark):
     docs = spark.createDataFrame(
         [("a b c",), ("a x c",), ("q",)], "text string"
@@ -61,15 +50,6 @@ def test_position_histogram(spark):
     assert m[(0, "a")] == 2 and m[(0, "q")] == 1
     assert m[(1, "b")] == 1 and m[(1, "x")] == 1
     assert m[(2, "c")] == 2
-
-
-def test_cluster_entropy(spark):
-    df = spark.createDataFrame(
-        [(1, 2), (1, 2), (2, 4)], "cluster_id long, fam_count long"
-    )
-    rows = {r["cluster_id"]: r["entropy"] for r in cluster_entropy(df).collect()}
-    assert abs(rows[1] - math.log(2)) < 1e-9  # two equal counts -> ln 2
-    assert abs(rows[2] - 0.0) < 1e-9
 
 
 def test_lambert_w_and_library_size():

@@ -1,5 +1,5 @@
-"""Substring-pass tests: shift-invariant window anchoring + the numpy
-suffix-array LCS certifier."""
+"""Substring-pass tests: shift-invariant window anchoring through the
+pipeline's window-hash path + the numpy suffix-array LCS certifier."""
 
 from __future__ import annotations
 
@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import make_fingerprint_udf
-from umi_dedup_spark.operators.suffix import substring_pairs, suffix_array_lcs
+from umi_dedup_spark.operators.lsh import candidate_pairs
+from umi_dedup_spark.operators.suffix import suffix_array_lcs, window_band_rows
 
 
 def test_lcs_basic():
@@ -44,9 +45,22 @@ def test_substring_pairs_shift_invariant(spark):
     b = shared + " " + " ".join(rng.choice(vocab) for _ in range(53))
     c = " ".join(rng.choice(vocab) for _ in range(120))  # unrelated
     cfg = DedupConfig()
-    pairs, overflow = substring_pairs(_fam_df(spark, [a, b, c]), cfg)
-    got = {(r["src"], r["dst"]) for r in pairs.collect()}
-    assert (0, 1) in got
-    assert all(2 not in p for p in got)
+    # the pipeline's path (DedupPipeline.build_pairs): the fused
+    # fingerprint UDF's win_hashes, substring band rows, candidate pairs
+    fp_udf = make_fingerprint_udf(
+        cfg.shingle_k, cfg.num_perm, cfg.seed,
+        cfg.substring_window_tokens, cfg.substring_anchor_stride,
+        cfg.fingerprint_max_tokens,
+    )
+    fams = _fam_df(spark, [a, b, c]).withColumn(
+        "win_hashes", fp_udf(F.col("norm_text"))["win_hashes"]
+    )
+    caches: list = []
+    pairs, _ = candidate_pairs(window_band_rows(fams), cfg, caches=caches)
+    got = {(r["src"], r["dst"], r["is_substring"]) for r in pairs.collect()}
+    for df in caches:
+        df.unpersist()
+    assert (0, 1, True) in got
+    assert all(2 not in p[:2] for p in got)
     # certification: the pair really shares a long verbatim run
     assert suffix_array_lcs(a, b) >= 100

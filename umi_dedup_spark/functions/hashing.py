@@ -44,7 +44,6 @@ from pyspark.sql import types as T
 # the SQL oracles. Bump whenever any emitted hash value can change.
 HASH_DIALECT = "md5-60bit/fnv-poly/mul64-minhash/v1"
 
-MERSENNE31 = np.uint64((1 << 31) - 1)
 _POLY = np.uint64(1099511628211)  # FNV prime as shingle combiner multiplier
 _FNV_BASIS = np.uint64(1469598103934665603)
 
@@ -306,49 +305,6 @@ def make_fingerprint_udf(
         return pd.DataFrame(out)
 
     return fingerprint_udf
-
-
-def make_minhash_udf(k: int, num_perm: int, seed: int):
-    """pandas_udf: text -> array<long> MinHash signature."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(texts: pd.Series) -> pd.Series:
-        sigs, _, _ = _fingerprint_batch(texts, k, num_perm, seed)
-        return pd.Series(sigs)
-
-    return minhash_udf
-
-
-def make_window_hash_udf(anchor_stride: int, window_tokens: int):
-    """pandas_udf: text -> array<long> winnowing-anchored window hashes
-    (the standalone substring-pass kernel; the pipeline gets the same
-    values from make_fingerprint_udf's win_hashes field)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def window_hash_udf(texts: pd.Series) -> pd.Series:
-        cache = shared_token_cache()
-        out = []
-        for t in texts:
-            toks = (t if isinstance(t, str) else "").split() or [""]
-            th = token_hashes(toks, cache)
-            out.append(window_anchor_hashes(th, anchor_stride, window_tokens))
-        return pd.Series(out)
-
-    return window_hash_udf
-
-
-def make_simhash_udf(k: int):
-    """pandas_udf: text -> long 64-bit SimHash fingerprint."""
-
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        cache = shared_token_cache()
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            out[i] = simhash64(shingle_hashes(t if isinstance(t, str) else "", k, cache))
-        return pd.Series(out)
-
-    return simhash_udf
 
 
 def hamming64(col_a, col_b):

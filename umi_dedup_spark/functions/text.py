@@ -2,8 +2,8 @@
 (JVM-side, whole-stage-codegen'd; no Python in the hot path).
 
 Covers the graft analogs of the reference's per-record projections/filters
-(SURVEY.md §2.2) plus the training-data-pipeline text ops: normalization,
-token counting, quality scoring, language ID, fingerprinting.
+(SURVEY.md §2.2): normalization, the usability filter and quality
+scoring.
 """
 
 from __future__ import annotations
@@ -11,14 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Minimal public-domain stopword list (language-ID heuristic features).
+# Minimal public-domain stopword list (quality-score feature).
 STOPWORDS_EN = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
-STOPWORDS_BY_LANG = {
-    "en": STOPWORDS_EN,
-    "fr": ["le", "la", "et", "de", "un", "une", "est", "que", "pour", "dans"],
-    "es": ["el", "la", "y", "de", "un", "una", "es", "que", "por", "en"],
-    "de": ["der", "die", "das", "und", "ein", "ist", "zu", "von", "mit", "nicht"],
-}
 
 
 def normalize_text(col: Column, lowercase: bool = True, collapse_ws: bool = True) -> Column:
@@ -42,23 +36,6 @@ def usable_filter(text: Column, min_chars: int) -> Column:
     """Usability predicate — analog of ``alignment_is_good`` +
     min-length filter (``lib/parse_sam.py:5-6``, ``extract_umi.py:25-27``)."""
     return text.isNotNull() & (F.length(text) >= min_chars)
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count (0 for empty)."""
-    t = F.trim(col)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """Token count under a BPE-ish regex: runs of letters, runs of digits,
-    or single punctuation marks each count as one token."""
-    return F.size(
-        F.filter(
-            F.regexp_extract_all(col, F.lit(r"([a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9])"), 1),
-            lambda x: x != "",
-        )
-    )
 
 
 def punct_ratio(col: Column) -> Column:
@@ -91,50 +68,3 @@ def quality_score(col: Column) -> Column:
         0.4 * length_score + 0.3 * (1.0 - punct_ratio(col)) + 0.3 * sw_presence
     ).alias("quality")
 
-
-def lang_id_heuristic(col: Column) -> Column:
-    """n-gram/stopword language-ID heuristic: pick the language whose
-    stopword list matches the most tokens; 'und' if nothing matches."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    scores = [
-        F.struct(
-            F.size(F.filter(toks, lambda t: t.isin(*sw))).alias("hits"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, sw in sorted(STOPWORDS_BY_LANG.items())
-    ]
-    best = F.greatest(*scores)
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def char_shingles(col: Column, k: int) -> Column:
-    """Array of character k-shingles (JVM-side, via sequence+transform)."""
-    n = F.length(col)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.when(n < k, F.array(col)).otherwise(
-        F.transform(idx, lambda i: F.substring(col, 1, k) if False else col.substr(i, F.lit(k)))
-    )
-
-
-def token_shingles(col: Column, k: int) -> Column:
-    """Array of k-token shingles (strings), JVM-side."""
-    toks = F.split(F.trim(col), r"\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
-
-
-def rolling_fingerprint(col: Column) -> Column:
-    """Polynomial rolling-hash document fingerprint over tokens (64-bit),
-    computed with the ``aggregate`` higher-order function — stays JVM-side.
-
-    fp = fold(tokens, 0, (acc, t) -> acc*31 + xxhash64(t))  (wrapping int64)
-    """
-    toks = F.split(F.trim(col), r"\s+")
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc * F.lit(31).cast("long") + F.xxhash64(t),
-    )

@@ -51,7 +51,7 @@ def candidate_pairs(
     """Emit canonical candidate pairs (src < dst by norm_hash) per bucket.
 
     Input rows carry an ``is_substring`` flag (False for LSH bands, True
-    for substring-window buckets — see ``suffix.add_window_hashes``); both
+    for substring-window buckets — see ``suffix.window_band_rows``); both
     flows union into ONE bucket exchange here, and the flag survives onto
     pairs: a pair is substring-proven iff any emitting bucket was a
     substring bucket (both members of a bucket share its flag).

@@ -4,8 +4,9 @@ Maps reference semantics:
 * C5 ``get_best`` (``lib/sequence_error.py:91-98``): cluster representative
   = highest-count member; reference tie-break is nondeterministic (stable
   sort of a set) — our documented deterministic rule: max count, then min
-  fam_tb (min doc_key). With directional edges the seed always wins, but
-  the window below re-derives it from membership so the rule is explicit.
+  fam_tb (min doc_key). The CC fixpoint (``cc.py``) labels every family
+  with the best-priority seed that reaches it, so the cluster id already
+  names the representative family.
 * C6/C7 ``reduce_clusters`` + relabel (``lib/sequence_error.py:100-111``,
   ``lib/markdup_sam.py:140-163``): members relabeled to the parent; row
   count conserved (asserted in tests, mirroring ``markdup_sam.py:159``).
@@ -27,29 +28,6 @@ def cluster_table(fams: DataFrame, labels: DataFrame) -> DataFrame:
     out = fams.join(labels, fams.norm_hash == labels.fam, "left").drop("fam")
     return out.withColumn(
         "cluster_id", F.coalesce(F.col("cluster_id"), F.col("norm_hash"))
-    )
-
-
-def cluster_representatives(clustered_fams: DataFrame) -> DataFrame:
-    """C5: representative family per cluster — max fam_count, tie min fam_tb.
-
-    Rank-1 as a ``min(struct(...))`` aggregation (map-side combine, no
-    single-task sort over a hot cluster): the ordering key (-fam_count,
-    fam_tb, norm_hash) is total (norm_hash unique), so appending the
-    payload fields to the struct cannot change the comparison.
-    """
-    best = F.min(
-        F.struct(
-            (-F.col("fam_count")).alias("nc"),
-            F.col("fam_tb").alias("tb"),
-            F.col("norm_hash").alias("nh"),
-            F.col("fam_count").alias("cnt"),
-        )
-    ).alias("best")
-    return clustered_fams.groupBy("cluster_id").agg(best).select(
-        "cluster_id",
-        F.col("best.nh").alias("rep_norm_hash"),
-        F.col("best.cnt").alias("rep_fam_count"),
     )
 
 

@@ -78,6 +78,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from umi_dedup_spark.session import spread_small_scan
+
 # conservative guard against float round-up at exact multiples: erring
 # DOWN lengthens the prefix (more candidates, never a missed pair)
 _EPS = 1e-9
@@ -162,9 +164,8 @@ def _bitset_join(
     # rows (id, group, size, one long) bounded by bitset_build_cap;
     # blocks are ContextCleaner-reclaimed with the result's lineage.
     enc = enc.localCheckpoint(eager=False)
-    # probe-side parallelism comes from the caller's scan-parallelism
-    # floor on `base` (jaccard_similarity_join spreads under-split
-    # inputs before any projection), so no extra exchange here
+    # probe-side parallelism comes from jaccard_similarity_join's
+    # spread_small_scan on `base`, so no extra exchange here
     a = enc.select(
         *jk,
         F.col("_id").alias("a_id"),
@@ -197,7 +198,6 @@ def jaccard_similarity_join(
     quadratic_group_cap: int = 1024,
     bitset_vocab_cap: int = 64,
     bitset_build_cap: int = 2_000_000,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """All pairs (a_id < b_id) with distinct-token Jaccard >= threshold.
 
@@ -225,11 +225,15 @@ def jaccard_similarity_join(
     verification, one broadcast join. ``bitset_vocab_cap=0`` disables
     the probe entirely.
 
-    Pass ``caches`` to receive the persisted base projection and release
-    it after materialization (the usual operator idiom, see
-    ``lsh.candidate_pairs``); without it the base stays lazy and is
-    recomputed by each of its consumers.
+    Batch-only and partly eager: the bitset-path vocabulary probe runs
+    Spark jobs while the plan is built, before the caller's action. A
+    streaming ``docs`` raises ``ValueError`` (no output mode could run the
+    plan anyway: it aggregates without a watermark and joins two streams).
     """
+    if docs.isStreaming:
+        raise ValueError(
+            "jaccard_similarity_join is batch-only; got a streaming DataFrame"
+        )
     t = float(threshold)
     if not 0.0 < t <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -254,29 +258,14 @@ def jaccard_similarity_join(
     else:
         vocab = None
 
-    # Scan-parallelism floor (r6, guide §2.5): a small input written as
-    # one parquet row group is unsplittable, so per-row work above this
-    # point (mask encoding, prefix explode, verification) runs on a
-    # single core. When the source yields fewer partitions than the
-    # session has task slots, spread the (narrow) rows first; at scale
-    # the condition never fires and no shuffle is added. NB: the caller
-    # controls whether TOKENIZATION parallelizes — the tokens expression
-    # lives in the caller's projection, below this exchange; callers
-    # with unsplittable small inputs should repartition the raw rows
-    # before projecting (see __spark_entry__._ngram_jaccard).
-    if not base.isStreaming:
-        slots = base.sparkSession.sparkContext.defaultParallelism
-        try:
-            n_in = base.rdd.getNumPartitions()
-        except Exception:
-            n_in = slots
-        if n_in < slots:
-            base = base.repartition(slots)
+    # per-row work above this point (mask encoding, prefix explode,
+    # verification) would run on one core for a one-row-group input.
+    # The tokens expression lives in the caller's projection, below this
+    # spread: callers with unsplittable small inputs should spread the
+    # raw rows before projecting (see __spark_entry__._ngram_jaccard).
+    base = spread_small_scan(base)
 
     if vocab is not None:
-        if caches is not None:
-            base = base.persist()
-            caches.append(base)
         return _bitset_join(base, vocab, grp, t)
 
     split = bool(gcols) and quadratic_group_cap > 0
@@ -286,9 +275,6 @@ def jaccard_similarity_join(
         # narrow-key equi-join otherwise
         gsz = base.groupBy("_grp").agg(F.count(F.lit(1)).alias("_gsz"))
         base = base.join(gsz, "_grp")
-    if caches is not None:
-        base = base.persist()
-        caches.append(base)
     quad = None
     if split:
         small = base.filter(F.col("_gsz") <= quadratic_group_cap)
@@ -320,16 +306,6 @@ def jaccard_similarity_join(
         .filter(F.col("_rn") <= plen)
         .select(*grp, "_id", "_sz", "_tok")
     )
-    if caches is not None:
-        # BOTH sides of the candidate self-join consume the prefix index;
-        # the alias projections differ below the exchange, so Catalyst
-        # cannot ReusedExchange them — without a persist the whole
-        # explode + frequency agg + per-doc window chain (3 exchanges)
-        # executes once per side. The index is narrow (prefix tokens
-        # only, ~(1-t)·|token occurrences| rows), far cheaper to cache
-        # than to recompute.
-        prefix = prefix.persist()
-        caches.append(prefix)
 
     # 3. candidate pairs: inverted-index self-join on (group, token),
     #    size filter, map-side-combined dedup

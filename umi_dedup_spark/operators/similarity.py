@@ -1,16 +1,15 @@
 """Similarity search over embedding columns (training-data-pipeline op).
 
-Two paths:
+Two top-k paths, plus :func:`semdedup_mark`:
 * :func:`brute_force_topk` — exact cosine top-k, all JVM-side
   (``zip_with`` + ``aggregate`` higher-order functions, no Python):
   the correctness baseline. Cross join is broadcast on the (small)
   query side; cost O(|queries| * |corpus|) — fine for verification,
   not the scale path.
-* :func:`lsh_bucketed_topk` — random-hyperplane (SimHash-for-vectors)
-  LSH: each vector hashed to ``n_tables`` bucket keys; candidates are
-  corpus vectors sharing a bucket; exact cosine re-ranking within the
-  candidate set only. Scale path: shuffle is bounded by bucket sizes,
-  and the hyperplane matrix is a broadcast constant.
+* :func:`ivf_topk` — inverted-file approximate top-k: corpus vectors
+  get one centroid cell, queries probe their ``nprobe`` nearest cells,
+  and candidates are re-ranked by exact cosine. Scale path: shuffled
+  bytes scale with nprobe/n_cells of the corpus per query.
 """
 
 from __future__ import annotations
@@ -20,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from umi_dedup_spark.session import spread_small_scan
 
 
 def _dot(a, b):
@@ -56,19 +57,9 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    # scan-parallelism floor (r6, guide §2.5): a one-row-group parquet
-    # corpus is unsplittable, so the |queries| x |corpus| interpreted-HOF
-    # scoring loop ran on 1-2 cores. Spread the probe side across task
-    # slots when (and only when) the scan yields fewer partitions —
-    # a no-op on any at-scale input, and this is the verification
-    # kernel, not the scale path.
-    if not c.isStreaming:
-        slots = c.sparkSession.sparkContext.defaultParallelism
-        try:
-            if c.rdd.getNumPartitions() < slots:
-                c = c.repartition(slots)
-        except Exception:
-            pass
+    # a one-row-group corpus would run the |queries| x |corpus|
+    # interpreted-HOF scoring loop on one core: spread the probe side
+    c = spread_small_scan(c)
     c = c.withColumn("_cn", F.sqrt(_dot(F.col("cv"), F.col("cv"))))
     scored = (
         c.join(F.broadcast(q))
@@ -89,47 +80,6 @@ def brute_force_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
-
-
-def make_hyperplane_udf(dim: int | None, n_bits: int, n_tables: int, seed: int):
-    """pandas_udf: embedding -> array of n_tables bucket keys (long).
-
-    Each table t uses n_bits random hyperplanes; key = packed sign bits,
-    salted with the table index. ``dim=None`` infers the dimension from
-    the first Arrow batch — the plane matrix is regenerated identically on
-    every Python worker from the fixed seed, so no driver-side
-    ``.first()`` probe job is needed.
-    """
-    # bit weights for packing sign bits into an int key (n_bits <= 56)
-    bit_weights = (1 << np.arange(n_bits, dtype=np.int64))
-    table_salt = (np.arange(n_tables, dtype=np.int64) << 56)
-    cache: dict[int, np.ndarray] = {}
-
-    def _planes(d: int) -> np.ndarray:
-        # (n_tables * n_bits, dim) — one matmul per Arrow batch covers
-        # every table; rows [t*n_bits, (t+1)*n_bits) are table t's planes
-        if d not in cache:
-            rng = np.random.RandomState(seed)
-            cache[d] = rng.normal(size=(n_tables * n_bits, d)).astype(np.float64)
-        return cache[d]
-
-    if dim is not None:
-        _planes(dim)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        # stack the whole Arrow batch: (n_rows, dim) @ (dim, T*B) — one
-        # BLAS call per batch, then vectorized bit packing; no per-row
-        # Python in the body
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (x @ _planes(x.shape[1]).T) > 0            # (n, T*B)
-        bits = bits.reshape(len(vecs), n_tables, n_bits)  # (n, T, B)
-        keys = (bits * bit_weights).sum(axis=2) | table_salt  # (n, T)
-        return pd.Series(list(keys))
-
-    return bucket_udf
 
 
 def make_cell_udf(centroids: np.ndarray, nprobe: int):
@@ -171,8 +121,7 @@ def ivf_topk(
     job); corpus rows get ONE cell id (narrow shuffle on cell), queries
     explode to nprobe cells, and the join is an equi-join on the cell id.
     Shuffled bytes scale with nprobe/n_cells of the corpus per query
-    rather than the full corpus (brute force) or per-table bucket
-    replication (hyperplane LSH).
+    rather than the full corpus (brute force).
     """
     # deterministic centroid sample: explicit ids when given (cell index =
     # rank of the id — SQL-mirrorable), else smallest xxhash64(vec_id, seed)
@@ -214,38 +163,6 @@ def ivf_topk(
     cand = (
         q.join(c, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
-def lsh_bucketed_topk(
-    queries: DataFrame, corpus: DataFrame, k: int = 10,
-    dim: int | None = None, n_bits: int = 12, n_tables: int = 4, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: hyperplane-LSH candidate generation + exact
-    cosine re-rank within shared buckets. Dimension is inferred inside the
-    UDF (seeded plane regeneration per worker) — no driver-side probe."""
-    udf = make_hyperplane_udf(dim, n_bits, n_tables, seed)
-
-    def bucketize(df, idn, vn):
-        return df.select(
-            F.col(id_col).alias(idn), F.col(vec_col).alias(vn),
-            F.explode(udf(F.col(vec_col))).alias("bucket"),
-        )
-
-    qb = bucketize(queries, "query_id", "qv")
-    cb = bucketize(corpus, "neighbor_id", "cv")
-    cand = (
-        qb.join(cb, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cos_sim", F.round(cosine(F.col("qv"), F.col("cv")), 6))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))

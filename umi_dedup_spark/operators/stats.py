@@ -5,8 +5,6 @@
   must partition the usable corpus (invariant ``markdup_sam.py:255``).
 * per-partition lineage (north rule): ``spark_partition_id()`` rollups per
   stage.
-* entropy (G9, ``lib/library_stats.py:6-17``) computed JVM-side with
-  higher-order array functions.
 * library-size estimate (G10, ``lib/library_stats.py:19-30``): independent
   reimplementation of the Lander-Waterman solve via Newton iteration on
   the Lambert-W equation — a driver-side scalar over two aggregates.
@@ -58,38 +56,6 @@ def count_histogram(fams: DataFrame, count_col: str = "fam_count") -> DataFrame:
         fams.groupBy(F.col(count_col).alias("count_value"))
         .agg(F.count(F.lit(1)).alias("n_keys"))
         .orderBy("count_value")
-    )
-
-
-def cluster_entropy(clustered_fams: DataFrame) -> DataFrame:
-    """G9 Shannon entropy of the family-count vector per cluster,
-    entirely JVM-side: collect counts per cluster (bounded — families per
-    cluster), then aggregate/transform higher-order functions."""
-    counts = clustered_fams.groupBy("cluster_id").agg(
-        F.collect_list("fam_count").alias("cs")
-    )
-    total = F.aggregate("cs", F.lit(0).cast("long"), lambda a, x: a + x).cast("double")
-    ent = -F.aggregate(
-        F.transform("cs", lambda x: x.cast("double") / total),
-        F.lit(0.0),
-        lambda a, p: a + F.when(p > 0, p * F.log(p)).otherwise(F.lit(0.0)),
-    )
-    return counts.select("cluster_id", ent.alias("entropy"))
-
-
-def aggregate_metric_logs(runs: list[tuple[str, DataFrame]]) -> DataFrame:
-    """S7/J3 (reference ``aggregate_logs.py:16-40``): align per-run metric
-    vectors into one matrix — union of (run, category, n) rows pivoted to
-    one column per run, joined on the category field."""
-    tagged = None
-    for name, df in runs:
-        t = df.withColumn("run", F.lit(name))
-        tagged = t if tagged is None else tagged.unionByName(t)
-    return (
-        tagged.groupBy("category")
-        .pivot("run", [name for name, _ in runs])
-        .agg(F.first("n"))
-        .orderBy("category")
     )
 
 

@@ -4,17 +4,21 @@ shingle-level MinHash dilutes (north-rule requirement).
 Analog in the reference: the optical-duplicate detector
 (``lib/optical_duplicates.py``) — an orthogonal second duplicate signal
 merged into the main pass. Here: every document emits hashes of
-fixed-width character windows at a fixed stride over the normalized text;
-two documents sharing any window hash provably share a verbatim substring
-of >= window length (window equality *is* the proof — no verification
-rescan needed). Buckets by window hash feed the same capped pair emission
-as the LSH pass.
+T-token windows of its normalized text; two documents sharing any window
+hash share a verbatim run of T tokens (window equality *is* the proof —
+no verification rescan needed). Buckets by window hash feed the same
+capped pair emission as the LSH pass.
+
+Anchors are chosen by winnowing (Schleimer et al. 2003; kernel and
+guarantee proof in ``functions/hashing.py::winnow_anchor_positions``):
+every s consecutive token positions hold at least one anchor, so a shared
+verbatim run of >= s+T-1 tokens always yields a shared window hash, at
+whatever offset it sits in each document. The window hashes come from
+the same per-token hashes as MinHash/SimHash, inside
+``hashing.make_fingerprint_udf``.
 
 A numpy suffix-array longest-common-substring checker
-(:func:`suffix_array_lcs`) backs the property tests and is available for
-optional in-pipeline verification of borderline pairs.
-
-All window hashing is JVM-side (sequence/transform/xxhash64/explode).
+(:func:`suffix_array_lcs`) backs the property tests.
 """
 
 from __future__ import annotations
@@ -23,54 +27,18 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.config import DedupConfig
-from umi_dedup_spark.operators.lsh import candidate_pairs
-
-
 # band_id marking substring-window buckets when unioned with LSH bands
 SUBSTRING_BAND_ID = 1_000_000
-
-
-def with_window_hashes(
-    df: DataFrame, cfg: DedupConfig, text_col: str = "norm_text",
-    out_col: str = "win_hashes",
-) -> DataFrame:
-    """Append ``out_col``: array of content-anchored long-window hashes
-    (empty for docs shorter than the window). All other columns pass
-    through.
-
-    Shift-invariance matters: two documents share the verbatim run at
-    *different* offsets, so absolute-stride chunking never lines up.
-    Anchor selection is TRUE WINNOWING (Schleimer et al. 2003; kernel +
-    guarantee proof in ``functions/hashing.py::winnow_anchor_positions``):
-    every s consecutive positions contain >= 1 anchor — deterministic,
-    content cannot suppress anchors — so a shared verbatim run of
-    >= s+T-1 tokens always produces a shared window hash.
-
-    Expected anchors per doc ~ 2*n_tokens/s (winnowing density).
-
-    Implementation: Arrow pandas UDF over numpy sliding_window_view (the
-    same per-token hashes the MinHash/SimHash kernel uses). A JVM
-    higher-order-function formulation (zip_with/slice doubling) is
-    interpreted per element — measured ~100x slower than this kernel —
-    and per-position lambda slices additionally re-inline derived arrays
-    under CollapseProject (O(n_tokens^2+) work per document).
-    """
-    from umi_dedup_spark.functions.hashing import make_window_hash_udf
-
-    udf = make_window_hash_udf(
-        cfg.substring_anchor_stride, cfg.substring_window_tokens
-    )
-    return df.withColumn(out_col, udf(F.col(text_col)))
 
 
 def window_band_rows(
     with_hashes: DataFrame, win_col: str = "win_hashes"
 ) -> DataFrame:
     """Map rows that already carry a ``win_col`` array into substring
-    bucket rows (band_id, band_hash) — the ONE place the substring band-row
-    shape lives, shared by :func:`add_window_hashes` and the pipeline
-    (which computes ``win_hashes`` in its fused fingerprint UDF).
+    bucket rows (band_id, band_hash), schema-compatible with the LSH band
+    rows so the two flows share one bucket exchange. The pipeline computes
+    ``win_hashes`` in its fused fingerprint UDF
+    (``hashing.make_fingerprint_udf``).
 
     The window ordinal is not a meaningful bucket axis (unlike the LSH
     band id): bucketing is purely by content hash so equal windows at
@@ -90,19 +58,6 @@ def window_band_rows(
         "band_hash",
         F.lit(True).alias("is_substring"),
     )
-
-
-def add_window_hashes(fams: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Explode families into content-anchored long-window hash bucket rows
-    (band_id, band_hash) — schema-compatible with the LSH band rows so the
-    two flows share one bucket exchange.
-    """
-    return window_band_rows(with_window_hashes(fams, cfg))
-
-
-def substring_pairs(fams: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
-    """Candidate pairs from shared verbatim windows (+ overflow metrics)."""
-    return candidate_pairs(add_window_hashes(fams, cfg), cfg)
 
 
 def suffix_array_lcs(a: str, b: str) -> int:

@@ -218,8 +218,8 @@ class DedupPipeline:
             # LSH band rows and substring window rows share one bucket
             # exchange: union first, then a single candidate_pairs pass
             # (one shuffle on (band_id, band_hash), one pair-dedupe agg).
-            # window_band_rows is the shared substring band-row shape —
-            # the pipeline and suffix.add_window_hashes cannot drift.
+            # window_band_rows maps the fused UDF's win_hashes into
+            # substring bucket rows of the same shape as the LSH bands.
             banded = add_band_hashes(fams, cfg).unionByName(
                 window_band_rows(fams)
             )

@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 _DRIVER_OPTS_KEY = "spark.driver.extraJavaOptions"
@@ -187,6 +187,8 @@ def get_spark(
         # min(maxPartitionBytes, max(openCostInBytes, total/minPartitionNum))).
         # At cluster scale total/minPartitionNum >> 128MB, so large scans
         # keep the exact same 128MB splits — this only widens small ones.
+        # An unsplittable one-row-group file stays under-split whatever
+        # the floor; spread_small_scan below covers that case.
         .config(
             "spark.sql.files.minPartitionNum",
             str(parallelism if parallelism is not None else _core_count()),
@@ -210,6 +212,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """Spread an under-split batch input across the session's task slots.
+
+    The second half of the scan-parallelism policy, after get_spark's
+    ``minPartitionNum`` split floor: a small parquet file written as ONE
+    row group cannot be split at all (every split past the row-group
+    start reads nothing), so all per-row work above the scan would run on
+    one core while the others idle. When ``df`` has fewer partitions than
+    ``defaultParallelism``, round-robin its rows across that many; at
+    scale the scan already yields at least that many partitions and
+    ``df`` comes back unchanged, so no bytes are shuffled. Streaming
+    inputs come back unchanged, and so does any input whose partition
+    count cannot be read.
+    """
+    if df.isStreaming:
+        return df
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        n = df.rdd.getNumPartitions()
+    except Exception:
+        return df
+    return df.repartition(slots) if n < slots else df
 
 
 def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
