@@ -16,7 +16,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from umi_dedup_spark import oracle
+from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.operators.cc import propagate_labels
+from umi_dedup_spark.operators.directional import build_edges
 
 
 def spark_cluster(spark, nodes, counts, tb, near_pairs):
@@ -105,3 +107,57 @@ def test_permutation_invariance(spark):
         if base is None:
             base = got
         assert got == base
+
+
+# -- build_edges itself: the directed-edge predicate over candidate pairs --
+
+NUM_PERM = 64
+
+
+def _expected_edges(count_a, count_b, sim_dist, mh_agree, is_substring, cfg):
+    """The build_edges predicate, computed in Python for the pair (1, 2)."""
+    near = (
+        is_substring
+        or sim_dist <= cfg.hamming_threshold
+        or mh_agree / NUM_PERM >= cfg.jaccard_threshold
+    )
+    out = []
+    if near and count_a >= 2 * count_b - 1:
+        out.append((1, 2))
+    if near and count_b >= 2 * count_a - 1:
+        out.append((2, 1))
+    return sorted(out)
+
+
+# (count_a, count_b, simhash distance, equal minhash positions of 64,
+#  is_substring, expected directed edges)
+EDGE_CASES = {
+    "9_vs_5_passes": (9, 5, 0, 64, False, [(1, 2)]),
+    "9_vs_6_no_edge": (9, 6, 0, 64, False, []),
+    "1_and_1_both_directions": (1, 1, 2, 0, False, [(1, 2), (2, 1)]),
+    "7_and_7_no_edge": (7, 7, 0, 64, False, []),
+    "substring_bypasses_simhash_gate": (9, 5, 10, 0, True, [(1, 2)]),
+    "minhash_jaccard_alone": (1, 1, 10, 40, False, [(1, 2), (2, 1)]),
+    "no_gate_passes": (1, 1, 10, 20, False, []),
+}
+
+
+@pytest.mark.parametrize("case", list(EDGE_CASES), ids=list(EDGE_CASES))
+def test_build_edges_matches_python_predicate(spark, case):
+    count_a, count_b, sim_dist, mh_agree, is_substring, expected = EDGE_CASES[case]
+    cfg = DedupConfig()
+    assert cfg.num_perm == NUM_PERM
+    mh_a = list(range(NUM_PERM))
+    mh_b = mh_a[:mh_agree] + [v + 1000 for v in mh_a[mh_agree:]]
+    fams = spark.createDataFrame(
+        [(1, count_a, 1, mh_a, 0), (2, count_b, 2, mh_b, (1 << sim_dist) - 1)],
+        "norm_hash long, fam_count long, fam_tb long, minhash array<long>, simhash long",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2, is_substring)], "src long, dst long, is_substring boolean"
+    )
+    # a list, not a set: a dropped or duplicated direction must show
+    got = sorted((r["src"], r["dst"]) for r in build_edges(pairs, fams, cfg).collect())
+    want = _expected_edges(count_a, count_b, sim_dist, mh_agree, is_substring, cfg)
+    assert want == expected
+    assert got == want

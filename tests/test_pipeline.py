@@ -110,3 +110,22 @@ def test_idempotence(spark, corpus, result):
     # distinct texts kept as separate survivors only if estimator > naive);
     # with naive estimator each cluster keeps exactly 1, so re-run keeps all
     assert res2.marked.filter(~F.col("is_duplicate")).count() >= int(n * 0.98)
+
+
+def test_run_leaves_one_persisted_rdd_per_stage(spark, corpus):
+    # localCheckpoint blocks cannot be released through DataFrame.unpersist:
+    # a run must leave exactly one persisted RDD per materialized stage plus
+    # the final CC label table. Guards the cc.py loop sweep and the bucket-
+    # cache release. Counted as new ids, so earlier tests' tables don't count.
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = persisted()
+    pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=8, algorithm="naive"))
+    pipe.run(corpus.to_spark(spark))
+    assert set(pipe.stage_rows) == {
+        "docs", "families", "pairs", "pairs_overflow", "edges", "clusters", "marked"
+    }
+    assert len(persisted() - before) == len(pipe.stage_rows) + 1

@@ -116,3 +116,31 @@ def test_order_priority_counts_semi_join_shape(spark):
     plan = _plan(df)
     assert "LeftSemi" in plan, plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_edges_broadcast_small_stage_tables(spark):
+    # a materialized stage keeps its size estimate, so the edge build's
+    # joins against small families/pairs tables broadcast instead of
+    # shuffling both sides into sort-merge joins
+    from umi_dedup_spark.operators.directional import build_edges
+    from umi_dedup_spark.plans.pipeline import DedupPipeline
+
+    cfg = DedupConfig(shuffle_partitions=8)
+    pipe = DedupPipeline(spark, cfg)
+    fams = pipe._stage("families", lambda: spark.range(200).select(
+        F.col("id").alias("norm_hash"),
+        (F.col("id") % 5 + 1).alias("fam_count"),
+        F.col("id").alias("fam_tb"),
+        F.transform(F.sequence(F.lit(0), F.lit(cfg.num_perm - 1)),
+                    lambda i: i + F.col("id")).alias("minhash"),
+        (F.col("id") * 7919).alias("simhash"),
+    ), resume=False)
+    pairs = pipe._stage("pairs", lambda: spark.range(400).select(
+        (F.col("id") % 200).alias("src"),
+        ((F.col("id") * 7 + 1) % 200).alias("dst"),
+        (F.col("id") % 3 == 0).alias("is_substring"),
+    ), resume=False)
+    assert pipe.stage_rows == {"families": 200, "pairs": 400}
+    plan = _plan(build_edges(pairs, fams, cfg))
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan

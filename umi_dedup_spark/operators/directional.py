@@ -11,7 +11,8 @@ Substring-pass pairs (shared >= window-length verbatim run) bypass the
 SimHash distance test — they carry their own proof of near-duplication —
 but still respect the directional count rule.
 
-All predicates are JVM-side whole-stage-codegen expressions.
+All predicates are JVM-side expressions (no Python); the MinHash Jaccard's
+``zip_with``/``aggregate`` are CodegenFallback, i.e. run interpreted.
 """
 
 from __future__ import annotations
@@ -23,90 +24,53 @@ from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import hamming64, minhash_jaccard
 
 
-def attach_pair_attrs(pairs: DataFrame, fams: DataFrame) -> DataFrame:
-    """Join family attributes (simhash, count, tie-break) onto both pair
-    sides. fams is the (much smaller) family table — broadcast when small;
-    left to Catalyst/AQE otherwise.
-    """
-    attrs = fams.select(
-        F.col("norm_hash").alias("fam"),
-        F.col("simhash"),
-        F.col("minhash"),
-        F.col("fam_count"),
-        F.col("fam_tb"),
-    )
-    a = attrs.select(
-        F.col("fam").alias("src"),
-        F.col("simhash").alias("simhash_a"),
-        F.col("minhash").alias("minhash_a"),
-        F.col("fam_count").alias("count_a"),
-        F.col("fam_tb").alias("tb_a"),
-    )
-    b = attrs.select(
-        F.col("fam").alias("dst"),
-        F.col("simhash").alias("simhash_b"),
-        F.col("minhash").alias("minhash_b"),
-        F.col("fam_count").alias("count_b"),
-        F.col("fam_tb").alias("tb_b"),
-    )
-    return pairs.join(a, "src").join(b, "dst")
-
-
-def directed_edges(pairs_with_attrs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Filter near-duplicate pairs and emit directed edges.
-
-    Input: canonical pairs with attrs and an ``is_substring`` flag column.
-    Output: (src, dst) directed — src passes the count predicate toward dst.
-    A pair yields 0, 1 or 2 directed edges; 0 means the two families stay
-    separate (exactly as in the reference, where no adjacency entry forms).
-    """
-    near = pairs_with_attrs.filter(
-        F.col("is_substring")
-        | (hamming64(F.col("simhash_a"), F.col("simhash_b")) <= cfg.hamming_threshold)
-        | (
-            minhash_jaccard(F.col("minhash_a"), F.col("minhash_b"))
-            >= cfg.jaccard_threshold
-        )
-    )
-    return _directional(near)
-
-
 def _directional(near: DataFrame) -> DataFrame:
-    fwd = near.filter(F.col("count_a") >= 2 * F.col("count_b") - 1).select(
-        F.col("src"), F.col("dst")
+    """Each near pair's 0-2 directed edges in ONE pass over ``near``: an
+    array of the two candidate directions, each null unless its count rule
+    holds, exploded and null-dropped. Two filters + a union would execute
+    the whole ``near`` subplan (attribute joins, MinHash Jaccard) twice."""
+    fwd = F.when(
+        F.col("count_a") >= 2 * F.col("count_b") - 1,
+        F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
     )
-    rev = near.filter(F.col("count_b") >= 2 * F.col("count_a") - 1).select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
+    rev = F.when(
+        F.col("count_b") >= 2 * F.col("count_a") - 1,
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
     )
-    return fwd.unionByName(rev)
+    return (
+        near.select(F.explode(F.array(fwd, rev)).alias("e"))
+        .filter(F.col("e").isNotNull())
+        .select("e.src", "e.dst")
+    )
 
 
 def build_edges(pairs: DataFrame, fams: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Candidate pairs -> directed edges, with a TWO-PHASE attribute join
-    that keeps the wide MinHash signatures (num_perm longs ~ 512B/family)
-    out of the main shuffle:
+    """Candidate pairs -> directed edges.
 
-    phase 1 joins only the narrow attrs (simhash 8B, count, tie-break) and
-    decides the cheap gate (substring proof OR SimHash Hamming ball);
-    phase 2 joins minhash ONLY for the residual pairs that failed the
-    cheap gate — at web scale most true near-dups pass phase 1, so the
-    signature bytes shuffled scale with the residual, not with every
-    candidate pair. Predicate semantics identical to
-    ``directed_edges(attach_pair_attrs(...))``.
+    A candidate pair (a, b) is *near* iff it is a substring-pass pair, OR
+    ``bit_count(simhash_a ^ simhash_b) <= cfg.hamming_threshold``, OR the
+    MinHash-estimated Jaccard (fraction of equal signature positions) is
+    ``>= cfg.jaccard_threshold``. A near pair yields the directed edge
+    a -> b iff ``count_a >= 2*count_b - 1``, and b -> a iff
+    ``count_b >= 2*count_a - 1`` — 0, 1 or 2 edges; 0 means the two
+    families stay separate (exactly as in the reference, where no
+    adjacency entry forms).
+
+    The attribute join is TWO-PHASE, keeping the wide MinHash signatures
+    (num_perm longs ~ 512B/family) out of the main join: phase 1 joins
+    only the narrow attrs (simhash 8B, count) and decides the cheap gate
+    (substring proof OR SimHash Hamming ball); phase 2 joins minhash ONLY
+    for the residual pairs that failed the cheap gate — at web scale most
+    true near-dups pass phase 1, so the signature bytes moved scale with
+    the residual, not with every candidate pair.
     """
-    light = fams.select(
-        F.col("norm_hash").alias("fam"),
-        F.col("simhash"),
-        F.col("fam_count"),
-        F.col("fam_tb"),
-    )
-    a = light.select(
-        F.col("fam").alias("src"),
+    a = fams.select(
+        F.col("norm_hash").alias("src"),
         F.col("simhash").alias("simhash_a"),
         F.col("fam_count").alias("count_a"),
     )
-    b = light.select(
-        F.col("fam").alias("dst"),
+    b = fams.select(
+        F.col("norm_hash").alias("dst"),
         F.col("simhash").alias("simhash_b"),
         F.col("fam_count").alias("count_b"),
     )

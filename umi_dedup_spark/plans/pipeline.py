@@ -30,6 +30,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,35 +59,6 @@ from umi_dedup_spark.operators.stats import (
     library_stats,
     partition_lineage,
 )
-
-
-def _plan_leaf(df: DataFrame) -> DataFrame:
-    """Zero-copy lineage truncation over a persisted stage (r6).
-
-    A persisted DataFrame substitutes its cache at PLANNING time, but its
-    logical plan still carries the full upstream lineage — every
-    downstream consumer re-pays Catalyst analysis over the whole pipeline
-    depth (measured: ~1.7s of driver time just to plan the CC fixpoint's
-    init labels at bench scale; the cost grows with pipeline depth, which
-    is exactly the VERDICT r4 "scale-flat fixed cost" in the labels
-    stage). Wrapping the executed RDD[InternalRow] as a LogicalRDD leaf
-    cuts the plan at the stage boundary WITHOUT copying data (unlike
-    localCheckpoint): the RDD reads the persisted blocks via
-    InMemoryTableScan. Trade-off: the leaf loses the child's output
-    partitioning metadata, so a downstream join on the stage's grouping
-    key re-exchanges the (narrow) stage output — exchanges of counted
-    stage rows are cheap; repeated whole-lineage analysis is not.
-    Falls back to the input unchanged if the internal API is missing."""
-    try:
-        spark = df.sparkSession
-        jdf = df._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        jdf2 = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        return DataFrame(jdf2, spark)
-    except Exception:
-        return df
 
 
 @dataclass
@@ -124,7 +96,7 @@ class DedupPipeline:
         """Run (or resume) a stage; snapshot + lineage when checkpointing.
 
         materialize=False: the stage feeds exactly one downstream consumer
-        — return it lazily (no persist, no eager count) so Spark fuses it
+        — return it lazily (no checkpoint, no eager count) so Spark fuses it
         into the consumer's job instead of a serial driver barrier. Only
         applies when no durable checkpoint is requested.
         """
@@ -138,21 +110,29 @@ class DedupPipeline:
         elif materialize:
             # multi-consumer stage: materialize once so downstream stages
             # (and the CC fixpoint loop) never recompute the fingerprint
-            # UDFs / LSH joins. persist() uses Spark's compressed columnar
-            # cache — measured ~5x faster to build than localCheckpoint's
-            # row-oriented block storage; the CC loop still
-            # localCheckpoints its (small) label table to cut the
-            # iterative lineage. The materialization count is recorded so
-            # later consumers (the fixpoint width sizing) read a number
-            # instead of re-issuing count() — which would re-run Catalyst
-            # analysis over the stage's full logical lineage.
-            df = df.persist()
+            # UDFs / LSH joins. The checkpoint hands consumers a LogicalRDD
+            # leaf that cuts the lineage (no whole-pipeline Catalyst
+            # analysis per consumer) and keeps the stage's output
+            # partitioning and size estimate, so joins against a small
+            # stage table plan as broadcast hash joins. Interleaved A/B on
+            # skew_naive (10 pairs, 4-CPU host) against persist() plus a
+            # stats-less leaf: cpu_s 35.0 -> 25.1 s, wall_s 10.6 -> 8.7 s;
+            # the edges stage's 24 sort-merge joins became broadcasts.
+            # MEMORY_AND_DISK is PySpark's serialized level; the JVM
+            # default keeps rows deserialized, several times larger.
+            # Broadcast sizing: the leaf carries Catalyst's ESTIMATE, and
+            # ArrayType's default size counts one element, so families
+            # reports ~1/9 of its real bytes and its (norm_hash, minhash)
+            # projection ~1/16-1/20. The 10 MB autoBroadcastJoinThreshold
+            # thus lets the edges stage broadcast up to ~200 MB of
+            # minhash rows (reached at ~380k families; NOTES "Stage
+            # boundary: localCheckpoint" has the per-stage figures). The
+            # row count is recorded so later consumers (the fixpoint
+            # width sizing) read a number.
+            df = df.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
             self.stage_rows[stage] = df.count()
-            # hand consumers a plan-truncated leaf over the persisted
-            # blocks: stage-over-stage lineage growth is what made every
-            # downstream toRdd/action pay whole-pipeline Catalyst
-            # analysis (see _plan_leaf)
-            df = _plan_leaf(df)
         self.lineage.append(partition_lineage(df, stage))
         return df
 
@@ -174,17 +154,17 @@ class DedupPipeline:
 
         self._ingest_has_doc_id = "doc_id" in pages.columns
         # docs_full stays LAZY (usable filter + hash/quality projection
-        # over the source); the persisted docs table is NARROW — no text.
+        # over the source); the materialized docs table is NARROW — no text.
         # Text is consumed exactly twice, both as lazy source re-scans:
         # the families aggregation (fingerprints need it per family) and
         # the final output join. It never sits in the cache and never
         # rides the survivor/cluster exchanges — payload bytes through
         # shuffles are what does not scale.
         docs_full = prepare_docs(pages, cfg)
-        # docs stays persisted: an interleaved A/B (r6, 4 pairs, one
+        # docs stays materialized: an interleaved A/B (r6, 4 pairs, one
         # session) measured the lazy variant LOSING — the marked stage's
         # two docs sub-consumers do not share an exchange in practice,
-        # so the recompute (+1s in marked) exceeds the ~0.3s persist
+        # so the recompute (+1s in marked) exceeds the ~0.3s materialize
         # barrier saved (lazy 8.1-8.8s pipeline vs persisted 7.1-8.0s)
         docs = timed("docs", lambda: docs_full.drop("text"))
 
@@ -300,7 +280,7 @@ class DedupPipeline:
             return labels
 
         # labels are already localCheckpoint'ed inside propagate_labels and
-        # feed exactly one consumer — a second persist would just copy them
+        # feed exactly one consumer — a second checkpoint would just copy them
         labels = timed("labels", build_labels, materialize=False)
 
         clustered = timed("clusters", lambda: cluster_table(fams, labels))
