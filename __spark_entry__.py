@@ -1444,7 +1444,7 @@ WA_KEYSPACE = 2**20  # config.DedupConfig.keyspace_size — |alphabet|^L analog
 def _survivor_counts(algorithm: str, alias: str):
     """E2/E3 on the board (reference CLI default is weighted_average2,
     ``/root/reference/dedup.py:18``): run the REAL estimator path
-    (operators/estimators.cluster_survivor_counts — histogram
+    (operators/estimators.survivor_spec + cluster_survivor_counts — histogram
     applyInPandas + apportion + rank join-back) per source-cluster over
     the exact-family size histogram, then report the per-cluster survivor
     total (= clamp(estimate, n_fams, total_docs) by count conservation,
@@ -1453,7 +1453,10 @@ def _survivor_counts(algorithm: str, alias: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
 
-        from umi_dedup_spark.operators.estimators import cluster_survivor_counts
+        from umi_dedup_spark.operators.estimators import (
+            cluster_survivor_counts,
+            survivor_spec,
+        )
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         fams = (
@@ -1468,7 +1471,9 @@ def _survivor_counts(algorithm: str, alias: str):
                 F.min("doc_id").alias("fam_tb"),
             )
         )
-        keep = cluster_survivor_counts(fams, algorithm, WA_KEYSPACE)
+        keep = cluster_survivor_counts(
+            fams, survivor_spec(fams, algorithm, WA_KEYSPACE)
+        )
         return keep.groupBy("cluster_id").agg(
             F.count(F.lit(1)).alias("n_fams"),
             F.sum("fam_count").alias("total_docs"),

@@ -81,3 +81,78 @@ def test_pipeline_hot_band_single_cluster(spark):
     hot_urls = [u for u, k in corpus.truth.items() if k == "hot0"]
     rows = res.marked.filter(F.col("url").isin(hot_urls)).select("cluster_id").collect()
     assert len({r["cluster_id"] for r in rows}) == 1
+
+
+_BANDED = "band_id int, band_hash long, norm_hash long, fam_count long, fam_tb long, is_substring boolean"
+
+
+def _python_rule(rows, cap):
+    """The bucket pair rule, spelled out: members sorted by (fam_count desc,
+    fam_tb, norm_hash); all pairs up to ``cap`` rows, else star from the
+    first member plus the chain of neighbours; a pair is substring-proven
+    if any bucket that emits it is a substring bucket."""
+    buckets: dict = {}
+    for band_id, band_hash, h, count, tb, sub in rows:
+        buckets.setdefault((band_id, band_hash), []).append((-count, tb, h, sub))
+    pairs: dict = {}
+    overflow = set()
+    for key, m in buckets.items():
+        m.sort()
+        n = len(m)
+        if n <= cap:
+            idx = [(i, j) for i in range(n) for j in range(i + 1, n)]
+        else:
+            overflow.add((*key, n))
+            idx = [(0, j) for j in range(1, n)] + [(i, i + 1) for i in range(1, n - 1)]
+        for i, j in idx:
+            a, b = m[i][2], m[j][2]
+            if a != b:
+                k = (min(a, b), max(a, b))
+                pairs[k] = pairs.get(k, False) or m[i][3]
+    return {(s, d, f) for (s, d), f in pairs.items()}, overflow
+
+
+def _run_rule(spark, rows, cap):
+    cfg = dataclasses.replace(DedupConfig(shuffle_partitions=4), max_bucket_families=cap)
+    pairs, overflow = candidate_pairs(spark.createDataFrame(rows, _BANDED), cfg)
+    return {tuple(r) for r in pairs.collect()}, {tuple(r) for r in overflow.collect()}
+
+
+def test_candidate_pairs_follow_the_bucket_rule(spark):
+    cap = 4
+    rows = [
+        # exactly cap members: all 6 pairs
+        *[(0, 1, h, 1, h, False) for h in (1, 2, 3, 4)],
+        # cap + 1 members: star from hub 11 (max count 3, min tb 2, min
+        # hash of the tb tie) plus the chain = 2n - 3 = 7 pairs
+        (0, 2, 10, 3, 5, False), (0, 2, 11, 3, 2, False), (0, 2, 12, 3, 2, False),
+        (0, 2, 13, 1, 0, False), (0, 2, 14, 2, 9, False),
+        # substring bucket listing family 20 twice: no self-pair
+        (-1, 3, 20, 1, 20, True), (-1, 3, 20, 1, 20, True), (-1, 3, 21, 1, 21, True),
+        # the same pair from an LSH bucket: substring proof wins
+        (1, 4, 20, 1, 20, False), (1, 4, 21, 1, 21, False),
+        # a bucket of one: no pairs
+        (0, 5, 30, 1, 30, False),
+    ]
+    got = _run_rule(spark, rows, cap)
+    want = _python_rule(rows, cap)
+    assert got == want
+    pairs, overflow = got
+    assert overflow == {(0, 2, 5)}
+    hot = {(s, d) for s, d, _ in pairs if s >= 10 and d < 20}
+    assert hot == {
+        (11, 12), (10, 11), (11, 14), (11, 13), (10, 12), (10, 14), (13, 14)
+    }
+    assert (20, 21, True) in pairs and (20, 20, True) not in pairs
+    assert not any(30 in p[:2] for p in pairs)
+
+
+def test_candidate_pairs_one_hot_bucket_of_1e5(spark):
+    # the ceiling case: one bucket is one sorted array in one task
+    n = 100_000
+    rows = [(7, 42, h, h % 7 + 1, (h * 31) % 1000, False) for h in range(n)]
+    pairs, overflow = _run_rule(spark, rows, 512)
+    want_pairs, want_overflow = _python_rule(rows, 512)
+    assert len(pairs) == 2 * n - 3
+    assert pairs == want_pairs
+    assert overflow == want_overflow == {(7, 42, n)}

@@ -112,20 +112,23 @@ def test_idempotence(spark, corpus, result):
     assert res2.marked.filter(~F.col("is_duplicate")).count() >= int(n * 0.98)
 
 
-def test_run_leaves_one_persisted_rdd_per_stage(spark, corpus):
+@pytest.mark.parametrize("algorithm", ["naive", "weighted_average2"])
+def test_run_leaves_one_persisted_rdd_per_stage(spark, corpus, algorithm):
     # localCheckpoint blocks cannot be released through DataFrame.unpersist:
     # a run must leave exactly one persisted RDD per materialized stage plus
-    # the final CC label table. Guards the cc.py loop sweep and the bucket-
-    # cache release. Counted as new ids, so earlier tests' tables don't count.
+    # the final CC label table. Guards the cc.py loop sweep, and that no
+    # operator persists on its own. Counted as new ids, so earlier tests'
+    # tables don't count.
     jsc = spark.sparkContext._jsc
 
     def persisted():
         return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
 
     before = persisted()
-    pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=8, algorithm="naive"))
+    pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=8, algorithm=algorithm))
     pipe.run(corpus.to_spark(spark))
-    assert set(pipe.stage_rows) == {
-        "docs", "families", "pairs", "pairs_overflow", "edges", "clusters", "marked"
-    }
+    stages = {"docs", "families", "pairs", "pairs_overflow", "edges", "clusters", "marked"}
+    if algorithm != "naive":
+        stages.add("survivor_spec")
+    assert set(pipe.stage_rows) == stages
     assert len(persisted() - before) == len(pipe.stage_rows) + 1

@@ -144,3 +144,25 @@ def test_edges_broadcast_small_stage_tables(spark):
     plan = _plan(build_edges(pairs, fams, cfg))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_candidate_pairs_is_one_bucket_aggregate(spark):
+    # pairs come from one groupBy(bucket) aggregate and one (src, dst)
+    # dedup: two shuffles, and no sort, window, join, interpreted array
+    # sort or cached table in between
+    from umi_dedup_spark.operators.lsh import candidate_pairs
+
+    banded = spark.createDataFrame(
+        [(0, 1, h, h % 3 + 1, h, h > 5) for h in range(8)]
+        + [(1, 2, h, 1, h, False) for h in range(4)],
+        "band_id int, band_hash long, norm_hash long, fam_count long, "
+        "fam_tb long, is_substring boolean",
+    )
+    pairs, _ = candidate_pairs(banded, DedupConfig(max_bucket_families=4))
+    pairs.collect()
+    final = _plan(pairs).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) == 2, final
+    assert not re.search(r"\bSort", final), final
+    for node in ("Window", "Join", "ArraySort", "array_sort", "InMemoryTableScan"):
+        assert node not in final, final

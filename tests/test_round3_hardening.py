@@ -19,6 +19,7 @@ from umi_dedup_spark.operators.estimators import (
     apportion_hist,
     cluster_survivor_counts,
     estimate_from_hist,
+    survivor_spec,
 )
 
 
@@ -57,7 +58,7 @@ def _run_and_compare(spark, rows, algorithm="weighted_average", keyspace=2000,
         rows, "cluster_id long, norm_hash long, fam_count long, fam_tb long"
     )
     got_df = cluster_survivor_counts(
-        df, algorithm, keyspace, n_range_buckets=n_range_buckets
+        df, survivor_spec(df, algorithm, keyspace), n_range_buckets=n_range_buckets
     )
     got = {(r["cluster_id"], r["norm_hash"]): r["n_keep"] for r in got_df.collect()}
     want = _oracle_n_keep(rows, algorithm, keyspace)

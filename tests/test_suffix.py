@@ -55,11 +55,8 @@ def test_substring_pairs_shift_invariant(spark):
     fams = _fam_df(spark, [a, b, c]).withColumn(
         "win_hashes", fp_udf(F.col("norm_text"))["win_hashes"]
     )
-    caches: list = []
-    pairs, _ = candidate_pairs(window_band_rows(fams), cfg, caches=caches)
+    pairs, _ = candidate_pairs(window_band_rows(fams), cfg)
     got = {(r["src"], r["dst"], r["is_substring"]) for r in pairs.collect()}
-    for df in caches:
-        df.unpersist()
     assert (0, 1, True) in got
     assert all(2 not in p[:2] for p in got)
     # certification: the pair really shares a long verbatim run

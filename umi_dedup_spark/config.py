@@ -24,7 +24,6 @@ class DedupConfig:
     # reference lib/umi_data.py:5) ---
     shingle_k: int = 5               # tokens per shingle
     num_perm: int = 64               # MinHash signature length
-    simhash_bits: int = 64           # SimHash fingerprint width
 
     # --- LSH banding (analog of the (strand,pos) grouping scope,
     # reference lib/markdup_sam.py:64) ---
@@ -66,8 +65,8 @@ class DedupConfig:
     # Semantics change, documented: two documents identical in their first
     # N tokens are near-dup candidates even if their tails differ, and a
     # verbatim overlap living entirely past token N is invisible to the
-    # substring pass. Default chosen from data (BENCH/cap_probe.py, NOTES
-    # "Round-5 measurements"): on 32k-token docs, uniform-edit near-dups
+    # substring pass. Default chosen from data (NOTES "fingerprint_max_tokens:
+    # recall-vs-cap, measured"): on 32k-token docs, uniform-edit near-dups
     # keep recall 1.0 at ANY cap (prefix similarity estimates global
     # similarity) while tail-only verbatim overlaps drop to 0.0 the
     # moment the cap ends before the overlap; families-stage kernel cost
@@ -82,7 +81,6 @@ class DedupConfig:
 
     # --- skew / bucket control ---
     max_bucket_families: int = 512   # all-pairs cap per LSH bucket
-    salt_buckets: int = 8            # salt factor for hot-key aggregations
     cc_max_iters: int = 25           # label-propagation fixpoint bound
     # partition width of the CC fixpoint working set: the loop runs on
     # edge-touched families only — usually a sliver of the corpus — and

@@ -426,44 +426,22 @@ def deduplicate_counts(
     return out
 
 
-_SIGN_BIT = -0x8000000000000000  # xor maps signed int64 order onto unsigned order
-
-
-def cluster_survivor_counts(
-    clustered_fams: DataFrame,
-    algorithm: str,
-    keyspace: int,
-    kmax: int = 10,
-    n_range_buckets: int = 64,
-    caches: list[DataFrame] | None = None,
+def survivor_spec(
+    clustered_fams: DataFrame, algorithm: str, keyspace: int, kmax: int = 10
 ) -> DataFrame:
-    """Per-cluster estimator, histogram-native: the pandas group handed to
-    a Python worker is the (cluster_id, fam_count, n_fams) HISTOGRAM —
+    """Per-cluster estimator, histogram-native: one row of (keep_base,
+    n_extra) per (cluster_id, fam_count). The pandas group handed to a
+    Python worker is the (cluster_id, fam_count, n_fams) HISTOGRAM —
     group size = number of distinct count values, never the number of
     families, so one hot cluster with 10^9 families cannot pin a single
     Python worker or blow its memory.
 
     Plan shape: groupBy(cluster_id, fam_count) pre-aggregation (map-side
-    combine) -> applyInPandas over the tiny histogram -> join the
-    (keep_base, n_extra) spec back to families; the n_extra families of a
-    (cluster, value) that receive the +1 are the n_extra SMALLEST by
-    (fam_tb asc, norm_hash asc) (the reference's own choice is
-    set-iteration order, i.e. arbitrary — documented variant).
-
-    Skew-safe rank: no window ever partitions by raw (cluster_id,
-    fam_count). At production scale fam_tb is a min-of-xxhash64 (uniform
-    int64 — prepare_docs hashes url/warc_ts when no ingest id exists), so
-    its ``n_range_buckets`` contiguous ranges split a hot group into
-    balanced slices while PRESERVING sort order (equal fam_tb -> same
-    bucket); with sequential ingest doc_ids the buckets collapse to one
-    (still exact, just unbalanced — identical to the pre-bucketed plan);
-    global rank = per-bucket row_number + per-bucket prefix offset from a
-    tiny (<= n_range_buckets rows/group) aggregate. Rows that cannot
-    receive a +1 (n_extra == 0, or their whole bucket sits past n_extra)
-    bypass the window entirely.
+    combine) -> applyInPandas over the tiny histogram. The result is lazy:
+    ``cluster_survivor_counts`` reads it in three branches, so a caller
+    that wants the estimator to run once materializes it first (the
+    pipeline's ``survivor_spec`` stage does).
     """
-    from pyspark.sql import Window
-
     hist = clustered_fams.groupBy("cluster_id", "fam_count").agg(
         F.count(F.lit(1)).alias("n_fams")
     )
@@ -479,19 +457,38 @@ def cluster_survivor_counts(
         base, extra = apportion_hist(values, mults, target)
         return pdf.assign(keep_base=base.astype("int64"), n_extra=extra.astype("int64"))
 
-    spec = hist.groupBy("cluster_id").applyInPandas(
+    return hist.groupBy("cluster_id").applyInPandas(
         run,
         schema="cluster_id long, fam_count long, n_fams long, keep_base long, n_extra long",
     )
-    # three output branches (zero / no_rank / ranked) each consume spec;
-    # persist the tiny table so the hist agg + pandas estimator run once,
-    # not three times — but ONLY when the caller passes ``caches`` to
-    # release it after materializing (the pipeline does). A bare call
-    # stays lazy: the deterministic estimator recomputes per branch
-    # rather than leaking one cached dataset per call in a long session.
-    if caches is not None:
-        spec = spec.persist()
-        caches.append(spec)
+
+
+_SIGN_BIT = -0x8000000000000000  # xor maps signed int64 order onto unsigned order
+
+
+def cluster_survivor_counts(
+    clustered_fams: DataFrame, spec: DataFrame, n_range_buckets: int = 64
+) -> DataFrame:
+    """Join a ``survivor_spec`` back to families: each family gets its
+    n_keep. The n_extra families of a (cluster, value) that receive the
+    +1 are the n_extra SMALLEST by (fam_tb asc, norm_hash asc) (the
+    reference's own choice is set-iteration order, i.e. arbitrary —
+    documented variant).
+
+    Skew-safe rank: no window ever partitions by raw (cluster_id,
+    fam_count). At production scale fam_tb is a min-of-xxhash64 (uniform
+    int64 — prepare_docs hashes url/warc_ts when no ingest id exists), so
+    its ``n_range_buckets`` contiguous ranges split a hot group into
+    balanced slices while PRESERVING sort order (equal fam_tb -> same
+    bucket); with sequential ingest doc_ids the buckets collapse to one
+    (still exact, just unbalanced — identical to the pre-bucketed plan);
+    global rank = per-bucket row_number + per-bucket prefix offset from a
+    tiny (<= n_range_buckets rows/group) aggregate. Rows that cannot
+    receive a +1 (n_extra == 0, or their whole bucket sits past n_extra)
+    bypass the window entirely.
+    """
+    from pyspark.sql import Window
+
     shift = 64 - max(1, (n_range_buckets - 1).bit_length())
     joined = (
         clustered_fams.select("cluster_id", "norm_hash", "fam_count", "fam_tb")

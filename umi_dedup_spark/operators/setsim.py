@@ -38,8 +38,8 @@ agg): no Python in the hot path, no cartesian product, shuffles keyed on
 (group, token) and candidate ids only — full token arrays ride exactly
 two joins, both restricted to candidate pairs.
 
-**Adaptive split** (same shape as ``lsh.candidate_pairs``'s small/big
-bucket strategy): for groups at or below ``quadratic_group_cap``
+**Adaptive split** (a per-group size cap, like the all-pairs cap in
+``lsh.candidate_pairs``): for groups at or below ``quadratic_group_cap``
 documents, the within-group all-pairs join is CHEAPER than the
 inverted-index plan — one shuffle co-locates the group, and when the
 output density is high (boilerplate-heavy web sources) prefix filtering

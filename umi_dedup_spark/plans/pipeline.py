@@ -9,8 +9,8 @@
                                                  exact pass already collapsed
                                                  identical text)
     -> LSH band explode + substring windows     (narrow)
-    -> candidate pairs                          (shuffle 2: bucketed self-join)
-    -> directional edges                        (shuffle 3: attr joins)
+    -> candidate pairs                          (shuffles 2-3: bucket agg, dedup)
+    -> directional edges                        (attr joins)
     -> label-propagation CC fixpoint            (shuffles 4..4+O(diameter))
     -> representative / estimator / survivors   (window + applyInPandas)
     -> map-back join, metrics, lineage          (broadcast-ish join)
@@ -39,7 +39,7 @@ from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import make_fingerprint_udf
 from umi_dedup_spark.operators.cc import propagate_labels
 from umi_dedup_spark.operators.directional import build_edges
-from umi_dedup_spark.operators.estimators import cluster_survivor_counts
+from umi_dedup_spark.operators.estimators import cluster_survivor_counts, survivor_spec
 from umi_dedup_spark.operators.exact import (
     exact_families,
     mark_exact_duplicates,
@@ -110,9 +110,9 @@ class DedupPipeline:
         elif materialize:
             # multi-consumer stage: materialize once so downstream stages
             # (and the CC fixpoint loop) never recompute the fingerprint
-            # UDFs / LSH joins. The checkpoint hands consumers a LogicalRDD
-            # leaf that cuts the lineage (no whole-pipeline Catalyst
-            # analysis per consumer) and keeps the stage's output
+            # UDFs / bucket aggregate. The checkpoint hands consumers a
+            # LogicalRDD leaf that cuts the lineage (no whole-pipeline
+            # Catalyst analysis per consumer) and keeps the stage's output
             # partitioning and size estimate, so joins against a small
             # stage table plan as broadcast hash joins. Interleaved A/B on
             # skew_naive (10 pairs, 4-CPU host) against persist() plus a
@@ -196,31 +196,27 @@ class DedupPipeline:
 
         def build_pairs():
             # LSH band rows and substring window rows share one bucket
-            # exchange: union first, then a single candidate_pairs pass
+            # aggregate: union first, then a single candidate_pairs pass
             # (one shuffle on (band_id, band_hash), one pair-dedupe agg).
             # window_band_rows maps the fused UDF's win_hashes into
             # substring bucket rows of the same shape as the LSH bands.
             banded = add_band_hashes(fams, cfg).unionByName(
                 window_band_rows(fams)
             )
-            pairs, overflow = candidate_pairs(
-                banded, cfg, caches=self._bucket_caches
-            )
+            pairs, overflow = candidate_pairs(banded, cfg)
             self._overflow_raw = overflow
             return pairs
 
         # pairs are consumed TWICE by the two-phase edge gate (cheap-gate
-        # branch + minhash-residual branch) — materialize, or the whole
-        # bucket exchange + self-join executes once per branch (measured:
+        # branch + minhash-residual branch) — materialize, or the bucket
+        # aggregate + pair emission executes once per branch (measured:
         # the fused-lazy variant doubled the edges stage wall)
         self._overflow_raw = None
-        self._bucket_caches: list[DataFrame] = []
         pairs = timed("pairs", build_pairs)
 
-        # overflow metrics: persisted as their own checkpoint stage (so a
-        # resumed run restores them even when the pairs stage is skipped).
-        # Materialized eagerly (it is tiny — one row per oversized bucket)
-        # so the shared bucket exchange cache can be released right after.
+        # overflow metrics: their own checkpoint stage (so a resumed run
+        # restores them even when the pairs stage is skipped); a bucket
+        # count over the banded rows that only this stage reads.
         over_path = self._ckpt_path("pairs_overflow")
         if self._overflow_raw is not None or (
             over_path and resume and dio.stage_complete(over_path, cfg)
@@ -228,11 +224,6 @@ class DedupPipeline:
             self.metrics_overflow = timed(
                 "pairs_overflow", lambda: self._overflow_raw
             )
-        # both consumers of the bucket exchange are materialized — release
-        # the cache (otherwise every run leaks one dataset in storage)
-        for c in self._bucket_caches:
-            c.unpersist()
-        self._bucket_caches.clear()
 
         edges = timed(
             "edges",
@@ -284,6 +275,16 @@ class DedupPipeline:
         labels = timed("labels", build_labels, materialize=False)
 
         clustered = timed("clusters", lambda: cluster_table(fams, labels))
+        # three branches of cluster_survivor_counts read the estimator spec:
+        # materialize it so the pandas estimator runs once. Its own stage,
+        # not nested in "marked": a job carries one stage description.
+        if cfg.algorithm != "naive":
+            spec = timed(
+                "survivor_spec",
+                lambda: survivor_spec(
+                    clustered, cfg.algorithm, cfg.keyspace_size, cfg.kmax
+                ),
+            )
 
         def build_marked():
             # the whole survivor/cluster chain runs on NARROW doc rows;
@@ -296,10 +297,9 @@ class DedupPipeline:
                 # fused survivor+representative: one agg+join, not two
                 marked = mark_survivors_and_rep(doc_clusters)
             else:
-                n_keep = cluster_survivor_counts(
-                    clustered, cfg.algorithm, cfg.keyspace_size, cfg.kmax,
-                    caches=self._marked_caches,
-                ).select("norm_hash", "n_keep")
+                n_keep = cluster_survivor_counts(clustered, spec).select(
+                    "norm_hash", "n_keep"
+                )
                 marked = attach_rep_url(
                     mark_survivors(
                         doc_clusters.join(n_keep, "norm_hash"),
@@ -325,11 +325,7 @@ class DedupPipeline:
                 texts = docs_full.groupBy("doc_key").agg(F.min("text").alias("text"))
             return marked.join(texts, "doc_key", "left")
 
-        self._marked_caches: list[DataFrame] = []
         marked = timed("marked", build_marked)
-        for c in self._marked_caches:
-            c.unpersist()
-        self._marked_caches.clear()
 
         result = PipelineResult(marked=marked, clusters=clustered, stage_times=times)
         return result
