@@ -9,6 +9,7 @@ reachability forcing C4 unique assignment, all-count-1 chains, ties.
 from __future__ import annotations
 
 import itertools
+from contextlib import contextmanager
 
 import pytest
 from hypothesis import given, settings
@@ -17,7 +18,11 @@ from pyspark.sql import functions as F
 
 from umi_dedup_spark import oracle
 from umi_dedup_spark.config import DedupConfig
-from umi_dedup_spark.operators.cc import propagate_labels
+from umi_dedup_spark.operators.cc import (
+    LABEL_ROW_BYTES,
+    labels_fit_broadcast,
+    propagate_labels,
+)
 from umi_dedup_spark.operators.directional import build_edges
 
 
@@ -107,6 +112,34 @@ def test_permutation_invariance(spark):
         if base is None:
             base = got
         assert got == base
+
+
+@contextmanager
+def join_threshold(spark, value):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("counts,near", CASES)
+def test_equivalence_without_broadcast(spark, counts, near):
+    # broadcasting disabled: the loop gives no join hint and the planner
+    # shuffles the edges itself; the answer must not change
+    with join_threshold(spark, "-1"):
+        assert not labels_fit_broadcast(spark, len(counts))
+        test_equivalence_fixed_cases(spark, counts, near)
+
+
+def test_labels_broadcast_decision_at_threshold(spark):
+    with join_threshold(spark, str(100 * LABEL_ROW_BYTES)):
+        assert labels_fit_broadcast(spark, 100)
+        assert not labels_fit_broadcast(spark, 101)
+    with join_threshold(spark, "-1"):
+        assert not labels_fit_broadcast(spark, 0)
 
 
 # -- build_edges itself: the directed-edge predicate over candidate pairs --

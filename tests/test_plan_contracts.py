@@ -21,6 +21,33 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _run_counting_jobs(spark, fn):
+    """Run ``fn``; return its result, the ids of the jobs it ran, and
+    the shuffle records those jobs wrote (from the status store)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+
+    def job_ids():
+        jobs = store.jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    out = fn()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    new = job_ids() - before
+    stages = set()
+    for jid in new:
+        ids = store.job(jid).stageIds()
+        stages.update(ids.apply(k) for k in range(ids.size()))
+    written = 0
+    for sid in stages:
+        try:
+            written += store.lastStageAttempt(sid).shuffleWriteRecords()
+        except Exception:  # a skipped stage never ran and is not stored
+            pass
+    return out, new, written
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -166,3 +193,47 @@ def test_candidate_pairs_is_one_bucket_aggregate(spark):
     assert not re.search(r"\bSort", final), final
     for node in ("Window", "Join", "ArraySort", "array_sort", "InMemoryTableScan"):
         assert node not in final, final
+
+
+def test_cc_round_never_shuffles_edge_table(spark):
+    # E >> N: every round moves O(nodes) rows. The label table is the
+    # broadcast side of the hop, so the edges are read in place and
+    # never repartitioned; the per-node min aggregates map-side.
+    from umi_dedup_spark.operators.cc import propagate_labels
+
+    n, e = 100, 10_000
+    nodes = spark.range(n).select(
+        F.col("id").alias("fam"), F.lit(1).cast("long").alias("fam_count"),
+        F.col("id").alias("fam_tb"),
+    )
+    # every (src, dst) pair once: the complete digraph on n nodes
+    edges = spark.range(e).select(
+        (F.col("id") % n).alias("src"), (F.col("id") / n).cast("long").alias("dst")
+    )
+    (labels, iters), _, written = _run_counting_jobs(
+        spark, lambda: propagate_labels(nodes, edges)
+    )
+    assert labels.count() == n and iters >= 1
+    assert written < e, written
+
+
+@pytest.mark.parametrize("shape", ["empty", "zero_partitions", "one_shuffle"])
+def test_stage_counts_rows_inside_its_checkpoint(spark, shape):
+    # stage_rows comes from an Observation on the stage's own eager
+    # checkpoint: _stage runs exactly the jobs a bare checkpoint runs
+    from umi_dedup_spark.plans.pipeline import DedupPipeline
+
+    def make():
+        if shape == "empty":
+            return spark.range(0)
+        if shape == "zero_partitions":
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), "id long")
+        return spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count()
+
+    _, bare, _ = _run_counting_jobs(spark, lambda: make().localCheckpoint(eager=True))
+    pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=8))
+    _, staged, _ = _run_counting_jobs(
+        spark, lambda: pipe._stage(shape, make, resume=False)
+    )
+    assert pipe.stage_rows == {shape: 10 if shape == "one_shuffle" else 0}
+    assert len(staged) == len(bare), (sorted(staged), sorted(bare))

@@ -49,6 +49,20 @@ def test_pretouched_heap_capped_at_max_heap(monkeypatch):
     assert session._driver_java_opts(None, "2g") == ""
 
 
+@pytest.mark.parametrize(
+    "text,nbytes",
+    [("2g", 2 * GIB), ("512m", 512 << 20), ("4096", 4096), ("10485760b", 10 << 20),
+     ("10MB", 10 << 20), ("1kb", 1024), ("-1", -1)],
+)
+def test_parse_size_bytes_reads_jvm_and_spark_sizes(text, nbytes):
+    assert session.parse_size_bytes(text) == nbytes
+
+
+def test_parse_size_bytes_rejects_fractions():
+    with pytest.raises(ValueError):
+        session.parse_size_bytes("1.5g")
+
+
 def test_get_spark_sets_codegen_cache_cap(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         session.CODEGEN_CACHE_MAX_ENTRIES

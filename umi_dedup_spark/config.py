@@ -82,15 +82,6 @@ class DedupConfig:
     # --- skew / bucket control ---
     max_bucket_families: int = 512   # all-pairs cap per LSH bucket
     cc_max_iters: int = 25           # label-propagation fixpoint bound
-    # partition width of the CC fixpoint working set: the loop runs on
-    # edge-touched families only — usually a sliver of the corpus — and
-    # every round is a chain of tiny sequential stage waves whose cost at
-    # small sizes is per-task overhead, not data (measured at 20k docs:
-    # 5,873 nodes over 32 partitions = 183 rows/task, rounds of 1.4-2.2s
-    # that are ~all scheduling). The pipeline sizes the loop's partition
-    # count as ceil(n_edges / cc_rows_per_partition), capped at
-    # shuffle_partitions — web-scale edge sets still get the full width.
-    cc_rows_per_partition: int = 100_000
 
     # --- estimator selection (reference lib/markdup_sam.py:53-62;
     # CLI default weighted_average2, reference dedup.py:18) ---

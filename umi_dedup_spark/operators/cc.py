@@ -16,17 +16,35 @@ final cluster seed is exactly
 
 i.e. the best-priority node that *reaches* n. That is a pure fixpoint —
 no sequential seeding loop — computed here as iterative label propagation
-along directed edges: O(diameter) joins, each followed by
-``localCheckpoint`` to truncate lineage (the Catalyst-inexpressible
-fixpoint loop, SURVEY.md §4). This replaces the reference's mutable
-cross-group result propagation (``lib/markdup_sam.py:196-199``) with
-stateless joins.
+along directed edges: O(log diameter) rounds of joins, each ending in
+an eager ``localCheckpoint`` that truncates lineage (the
+Catalyst-inexpressible fixpoint loop, SURVEY.md §4). This replaces the
+reference's mutable cross-group result propagation
+(``lib/markdup_sam.py:196-199``) with stateless joins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from umi_dedup_spark.session import parse_size_bytes
+
+# Bytes of one label row (fam, struct(nc, tb, fam)) as an UnsafeRow: an
+# 8-byte null bitset and two 8-byte slots, plus the nested struct's own
+# row (8-byte bitset, three longs) = 56 bytes, rounded up to 64 for the
+# broadcast hash relation's per-row overhead.
+LABEL_ROW_BYTES = 64
+
+
+def labels_fit_broadcast(spark: SparkSession, n_nodes: int) -> bool:
+    """True when a label table of ``n_nodes`` rows fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (negative = disabled: the
+    planner then chooses every join itself)."""
+    threshold = parse_size_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
+    return n_nodes * LABEL_ROW_BYTES <= threshold
 
 
 def _pack(count_col, tb_col, fam_col):
@@ -45,24 +63,13 @@ class CCNotConverged(RuntimeError):
 
 
 def propagate_labels(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iters: int = 25,
-    num_partitions: int | None = None,
+    nodes: DataFrame, edges: DataFrame, max_iters: int = 25
 ) -> tuple[DataFrame, int]:
     """Fixpoint: label(n) = best-priority node among {m: m ->* n} ∪ {n}.
 
     nodes: (fam, fam_count, fam_tb). edges: directed (src, dst).
     Returns (labels, iterations): labels = (fam, cluster_id) where
     cluster_id is the seed family's norm_hash.
-
-    ``num_partitions``: explicit partition width for the fixpoint working
-    set (labels, edges, and each round's aggregation). The loop's data is
-    the edge-touched families only, and each round is a chain of small
-    sequential stage waves — when the working set is far smaller than
-    ``spark.sql.shuffle.partitions``, per-task overhead dominates every
-    round. The caller sizes this from the (already materialized) edge
-    count; None keeps the session default (the right answer at scale).
 
     Convergence is O(log diameter), not O(diameter): each round combines
     (a) one edge hop (neighbor labels) with (b) pointer doubling — every
@@ -74,105 +81,88 @@ def propagate_labels(
     converges in ~log2(d) rounds instead of d. Raises
     :class:`CCNotConverged` if max_iters rounds were not enough
     (2^max_iters-hop reach — unreachable in practice).
+
+    A round moves O(nodes) rows, never the edge table: the label table
+    (one row per node, far smaller than the edges) is the broadcast build
+    side of all three joins when it fits the session's broadcast
+    threshold, so the edges are read in place from their checkpoint, and
+    the per-node ``min`` aggregates map-side before its one shuffle. A
+    checkpoint leaf reports ``UnknownPartitioning`` under AQE, so
+    pre-partitioning the edges by src would not spare that shuffle.
     """
+    spark = nodes.sparkSession
     # localCheckpoint blocks have NO public release API (DataFrame
     # .unpersist only touches the SQL cache), and the ContextCleaner only
     # reclaims them after a JVM GC notices the RDD is unreachable — in a
     # long-lived session each pipeline run would strand its loop-internal
-    # checkpoints (init labels, edge snapshot, every non-final round)
-    # in executor storage. Record the persistent-RDD ids created by this
-    # loop and free all but the final label table's before returning.
+    # checkpoints (init labels, every non-final round) in executor
+    # storage. Record the persistent-RDD ids created by this loop and
+    # free all but the final label table's before returning.
     # Caveat: assumes no concurrent persist() on this SparkContext during
     # the loop (the pipeline is single-threaded per run).
-    _jsc = nodes.sparkSession.sparkContext._jsc
+    _jsc = spark.sparkContext._jsc
     _rdds_before = {int(i) for i in _jsc.getPersistentRDDs().keySet().toArray()}
-    labels = nodes.select(
-        F.col("fam"),
-        _pack(F.col("fam_count"), F.col("fam_tb"), F.col("fam")).alias("lbl"),
-    )
-    if num_partitions is not None:
-        labels = labels.repartition(num_partitions, "fam")
-    # lazy: the blocks materialize inside round 0's single action instead
-    # of a separate serial job barrier (r6 — the eager init job was ~1.7s
-    # of the 3.6s labels stage at bench scale; round 0 consumes `labels`
-    # twice, and a lazy localCheckpoint still computes its blocks once)
-    labels = labels.localCheckpoint(eager=False)
 
-    # the hop side is invariant across rounds: partition + sort it by src
-    # ONCE and snapshot it as a LEAF (localCheckpoint -> LogicalRDD, which
-    # preserves outputPartitioning/outputOrdering), so every round's hop
-    # join shuffles and sorts only the (small) label delta side, never the
-    # edge table again. A persist() would give the same *execution* (the
-    # cache is substituted at planning time) but NOT the same *planning*:
-    # each round's localCheckpoint eagerly plans its tree (toRdd), and
-    # with a persisted-but-not-truncated edge table that tree still
-    # contains the pipeline's entire upstream lineage — measured 2-3s of
-    # driver-side Catalyst analysis PER ROUND at 20k docs (the dominant
-    # labels-stage cost), growing with pipeline depth at scale. The leaf
-    # cuts round planning to milliseconds. Blocks are freed by the
-    # ContextCleaner when the loop's DataFrames are collected — there is
-    # no unpersist() for checkpoint blocks, and the table is one narrow
-    # (src, dst) pair per edge, the smallest table in the stage.
-    edges_by_src = (
-        (
-            edges.repartition(num_partitions, "src")
-            if num_partitions is not None
-            else edges.repartition("src")
+    # every checkpoint below is eager and carries an Observation: its
+    # metrics arrive with the checkpoint's own job (on a LAZY checkpoint
+    # an Observation silently reports zeros)
+    init = Observation()
+    labels = (
+        nodes.select(
+            F.col("fam"),
+            _pack(F.col("fam_count"), F.col("fam_tb"), F.col("fam")).alias("lbl"),
         )
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=False)
+        .observe(init, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint(eager=True)
     )
+    # decided once: labels never gain rows across rounds
+    bcast = labels_fit_broadcast(spark, init.get["rows"])
+
+    def lookup(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if bcast else df
 
     iters = 0
     converged = False
     try:
         for it in range(max_iters):
             iters += 1
-            incoming = (
-                edges_by_src.join(labels, edges_by_src.src == labels.fam)
-                .select(F.col("dst").alias("fam"), F.col("lbl"))
+            hop_src = lookup(labels)
+            incoming = edges.join(hop_src, edges.src == hop_src.fam).select(
+                F.col("dst").alias("fam"), F.col("lbl")
             )
-            upd = incoming
-            if it > 0:
+            if it == 0:
+                # every label is self-pointing, so doubling would be an
+                # identity self-join: each node offers its own label
+                own = labels
+            else:
                 # pointer doubling: adopt the label of the node my label
-                # points at. Skipped in round 0 where every label is
-                # self-pointing (doubling would be an identity self-join).
-                doubled = (
+                # points at. lbl(lbl(n).fam) <= lbl(n), so this also
+                # offers every node a candidate no worse than its own.
+                own = (
                     labels.alias("x")
-                    .join(labels.alias("y"), F.col("x.lbl.fam") == F.col("y.fam"))
+                    .join(lookup(labels).alias("y"), F.col("x.lbl.fam") == F.col("y.fam"))
                     .select(F.col("x.fam").alias("fam"), F.col("y.lbl").alias("lbl"))
                 )
-                upd = upd.unionByName(doubled)
-            # improvements only ride the shuffle: the full label table is
-            # the left join side (keeps its checkpoint partitioning), the
-            # aggregated candidate minima are the delta side. ONE job per
-            # round: the lazy localCheckpoint's blocks are materialized by
-            # the same action that fetches the change flag.
-            if num_partitions is not None:
-                # land the agg on the labels' width: HashPartitioning(fam)
-                # satisfies the agg's required distribution, so the agg
-                # runs in place and the left join is co-partitioned — one
-                # narrow exchange per round instead of agg-width + rewidth.
-                # (Skipping map-side partial agg is free here: this branch
-                # only fires when the working set is small.)
-                upd = upd.repartition(num_partitions, "fam")
-            best = upd.groupBy("fam").agg(F.min("lbl").alias("new_lbl"))
-            new_labels = (
-                labels.join(best, "fam", "left")
+            # every node has a candidate, so the improvement join is an
+            # inner join that can build on the (broadcast) label table
+            best = (
+                incoming.unionByName(own)
+                .groupBy("fam")
+                .agg(F.min("lbl").alias("new_lbl"))
+            )
+            round_obs = Observation()
+            labels = (
+                best.join(lookup(labels), "fam")
                 .select(
                     "fam",
-                    F.when(
-                        F.col("new_lbl") < F.col("lbl"), F.col("new_lbl")
-                    ).otherwise(F.col("lbl")).alias("lbl"),
-                    F.coalesce(
-                        F.col("new_lbl") < F.col("lbl"), F.lit(False)
-                    ).alias("chg"),
+                    F.col("new_lbl").alias("lbl"),
+                    (F.col("new_lbl") < F.col("lbl")).alias("chg"),
                 )
-                .localCheckpoint(eager=False)
+                .observe(round_obs, F.max("chg").alias("changed"))
+                .drop("chg")
+                .localCheckpoint(eager=True)
             )
-            changed = new_labels.agg(F.max("chg")).collect()[0][0]
-            labels = new_labels.select("fam", "lbl")
-            if not changed:
+            if not round_obs.get["changed"]:
                 converged = True
                 break
     finally:

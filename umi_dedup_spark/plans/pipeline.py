@@ -11,7 +11,9 @@
     -> LSH band explode + substring windows     (narrow)
     -> candidate pairs                          (shuffles 2-3: bucket agg, dedup)
     -> directional edges                        (attr joins)
-    -> label-propagation CC fixpoint            (shuffles 4..4+O(diameter))
+    -> label-propagation CC fixpoint            (O(log diameter) rounds; one
+                                                 shuffle each while the labels
+                                                 broadcast)
     -> representative / estimator / survivors   (window + applyInPandas)
     -> map-back join, metrics, lineage          (broadcast-ish join)
     -> write marked corpus + clusters + metrics
@@ -31,7 +33,7 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from umi_dedup_spark import io as dio
@@ -112,12 +114,16 @@ class DedupPipeline:
             # (and the CC fixpoint loop) never recompute the fingerprint
             # UDFs / bucket aggregate. The checkpoint hands consumers a
             # LogicalRDD leaf that cuts the lineage (no whole-pipeline
-            # Catalyst analysis per consumer) and keeps the stage's output
-            # partitioning and size estimate, so joins against a small
-            # stage table plan as broadcast hash joins. Interleaved A/B on
-            # skew_naive (10 pairs, 4-CPU host) against persist() plus a
-            # stats-less leaf: cpu_s 35.0 -> 25.1 s, wall_s 10.6 -> 8.7 s;
-            # the edges stage's 24 sort-merge joins became broadcasts.
+            # Catalyst analysis per consumer) and keeps the stage's size
+            # estimate, so joins against a small stage table plan as
+            # broadcast hash joins. It does NOT keep the output
+            # partitioning: under AQE the leaf reports
+            # UnknownPartitioning(0), eager or lazy, and a join on it
+            # plans Exchange hashpartitioning over Scan ExistingRDD.
+            # Interleaved A/B on skew_naive (10 pairs, 4-CPU host)
+            # against persist() plus a stats-less leaf: cpu_s 35.0 ->
+            # 25.1 s, wall_s 10.6 -> 8.7 s; the edges stage's 24
+            # sort-merge joins became broadcasts.
             # MEMORY_AND_DISK is PySpark's serialized level; the JVM
             # default keeps rows deserialized, several times larger.
             # Broadcast sizing: the leaf carries Catalyst's ESTIMATE, and
@@ -126,13 +132,17 @@ class DedupPipeline:
             # projection ~1/16-1/20. The 10 MB autoBroadcastJoinThreshold
             # thus lets the edges stage broadcast up to ~200 MB of
             # minhash rows (reached at ~380k families; NOTES "Stage
-            # boundary: localCheckpoint" has the per-stage figures). The
-            # row count is recorded so later consumers (the fixpoint
-            # width sizing) read a number.
-            df = df.localCheckpoint(
+            # boundary: localCheckpoint" has the per-stage figures).
+            # The row count rides the checkpoint's own job as an
+            # Observation (counting the checkpoint afterwards cost two
+            # more jobs under AQE). It fires on an EAGER checkpoint,
+            # empty and zero-partition inputs included; on a lazy one it
+            # would silently report 0.
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
                 eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
             )
-            self.stage_rows[stage] = df.count()
+            self.stage_rows[stage] = obs.get["rows"]
         self.lineage.append(partition_lineage(df, stage))
         return df
 
@@ -235,38 +245,16 @@ class DedupPipeline:
             # untouched families (the vast majority of a web corpus) never
             # enter the loop — cluster_table() self-assigns them (C9
             # single-UMI shortcut, reference lib/sequence_error.py:131-132)
-            # no .distinct(): LEFT SEMI dedups inherently, and the
-            # distinct was a whole extra shuffle+aggregate ahead of the
-            # semi join's own exchange (r6; the init-labels job is half
-            # the labels stage wall at bench scale)
-            touched = edges.select(F.col("src").alias("fam")).unionByName(
-                edges.select(F.col("dst").alias("fam"))
-            )
+            # the endpoints are deduped map-side before the semi join:
+            # 5,819 rows shuffled for skew_naive's 326,666 edges, where
+            # the raw src/dst union shuffled 653,332
+            touched = edges.select(
+                F.explode(F.array("src", "dst")).alias("fam")
+            ).distinct()
             nodes = fams.select(
                 F.col("norm_hash").alias("fam"), "fam_count", "fam_tb"
             ).join(touched, "fam", "left_semi")
-            # size the fixpoint's partition width from the edge count,
-            # recorded when the edges stage materialized (a fresh
-            # edges.count() would re-run Catalyst analysis over the whole
-            # upstream lineage just to read a cached number; a resumed-
-            # from-checkpoint edges stage has no recorded count, so fall
-            # back to counting the — then parquet-backed, shallow — table).
-            # Small working sets collapse to a few partitions (per-task
-            # overhead dominated every round at session width); web-scale
-            # edge sets keep the full width.
-            n_edges = self.stage_rows.get("edges")
-            if n_edges is None:
-                n_edges = edges.count()
-            fixpoint_p = max(
-                1,
-                min(
-                    cfg.shuffle_partitions,
-                    -(-n_edges // max(1, cfg.cc_rows_per_partition)),
-                ),
-            )
-            labels, iters = propagate_labels(
-                nodes, edges, cfg.cc_max_iters, num_partitions=fixpoint_p
-            )
+            labels, iters = propagate_labels(nodes, edges, cfg.cc_max_iters)
             self.cc_iterations = iters
             return labels
 

@@ -7,6 +7,7 @@ below are made for the cluster case (SURVEY.md §4).
 from __future__ import annotations
 
 import os
+import re
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, SparkSession
@@ -75,9 +76,18 @@ def _available_mem_bytes() -> int | None:
     return None
 
 
-def _parse_size_bytes(s: str) -> int:
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(s[-1].lower())
-    return int(s[:-1]) * mult if mult else int(s)
+_SIZE_UNITS = {
+    "": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50,
+}
+
+
+def parse_size_bytes(s: str) -> int:
+    """Bytes in a JVM (``512m``) or Spark (``10485760b``, ``10MB``, ``-1``)
+    size string; a negative value passes through (Spark's "disabled")."""
+    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", s.strip().lower())
+    if not m:
+        raise ValueError(f"not a size string: {s!r}")
+    return int(m.group(1)) * _SIZE_UNITS[m.group(2)]
 
 
 def _driver_java_opts(extra_conf: dict[str, str] | None, heap: str) -> str:
@@ -92,7 +102,7 @@ def _driver_java_opts(extra_conf: dict[str, str] | None, heap: str) -> str:
     xms = os.environ.get("SPARK_DRIVER_XMS", "8g")
     parts = []
     if xms not in ("0", "", "none"):
-        xms_bytes = min(_parse_size_bytes(xms), _parse_size_bytes(heap))
+        xms_bytes = min(parse_size_bytes(xms), parse_size_bytes(heap))
         avail = _available_mem_bytes()
         if avail is None or avail >= int(xms_bytes * 1.5):
             parts.append(f"-Xms{xms_bytes >> 20}m -XX:+AlwaysPreTouch")
