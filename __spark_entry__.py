@@ -1169,11 +1169,13 @@ def _paired_umi_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL set-similarity join (operators/setsim.py — prefix-filtered
-    inverted-index plan, no quadratic per-group self-join); oracle =
-    q_ngram_jaccard_pairs, the quadratic all-pairs mirror. Identical
-    output by the prefix-filter theorem: pruning only drops pairs that
-    provably cannot reach the threshold."""
+    """The REAL set-similarity join (operators/setsim.py, no quadratic
+    per-group self-join); oracle = q_ngram_jaccard_pairs, the quadratic
+    all-pairs mirror. The testdata's 31-token vocabulary and small doc
+    table select the bitset path: one broadcast join on the source with
+    an exact bit_count intersection per pair. A large vocabulary would
+    take the prefix-filtered path, identical output by the prefix-filter
+    theorem."""
     from pyspark.sql import functions as F
 
     from umi_dedup_spark.operators.setsim import jaccard_similarity_join

@@ -9,7 +9,6 @@ reachability forcing C4 unique assignment, all-count-1 chains, ties.
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager
 
 import pytest
 from hypothesis import given, settings
@@ -114,31 +113,20 @@ def test_permutation_invariance(spark):
         assert got == base
 
 
-@contextmanager
-def join_threshold(spark, value):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 @pytest.mark.parametrize("counts,near", CASES)
-def test_equivalence_without_broadcast(spark, counts, near):
+def test_equivalence_without_broadcast(spark, join_threshold, counts, near):
     # broadcasting disabled: the loop gives no join hint and the planner
     # shuffles the edges itself; the answer must not change
-    with join_threshold(spark, "-1"):
+    with join_threshold("-1"):
         assert not labels_fit_broadcast(spark, len(counts))
         test_equivalence_fixed_cases(spark, counts, near)
 
 
-def test_labels_broadcast_decision_at_threshold(spark):
-    with join_threshold(spark, str(100 * LABEL_ROW_BYTES)):
+def test_labels_broadcast_decision_at_threshold(spark, join_threshold):
+    with join_threshold(str(100 * LABEL_ROW_BYTES)):
         assert labels_fit_broadcast(spark, 100)
         assert not labels_fit_broadcast(spark, 101)
-    with join_threshold(spark, "-1"):
+    with join_threshold("-1"):
         assert not labels_fit_broadcast(spark, 0)
 
 

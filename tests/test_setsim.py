@@ -1,11 +1,12 @@
-"""Prefix-filtered set-similarity join == quadratic all-pairs ground truth.
+"""Set-similarity join == quadratic all-pairs ground truth.
 
 The operator (operators/setsim.py) must return EXACTLY the rows of the
-naive per-group quadratic self-join for every corpus — prefix filtering
-is a pure pruning of provably-unqualifiable pairs. The ground truth here
-is the same quadratic Spark SQL that serves as the DuckDB oracle mirror
-(__spark_entry__.q_ngram_jaccard_pairs), so these tests also pin the
-entry-query parity locally.
+naive per-group quadratic self-join for every corpus, on both of its
+paths: prefix filtering is a pure pruning of provably-unqualifiable
+pairs, and the bitset path computes the same Jaccard double. The ground
+truth here is the same quadratic Spark SQL that serves as the DuckDB
+oracle mirror (__spark_entry__.q_ngram_jaccard_pairs), so these tests
+also pin the entry-query parity locally.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from umi_dedup_spark.operators import setsim
 from umi_dedup_spark.operators.setsim import jaccard_similarity_join
 
 import __spark_entry__ as entry_mod
@@ -38,26 +40,31 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _prefix_rows(tset, **kw):
+    """Rows of the prefix-filtered path, forced by a probe that finds no
+    small universe."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(setsim, "_small_universe_vocab", lambda base: None)
+        return _rows(jaccard_similarity_join(tset, **kw))
+
+
 def _assert_match(spark, docs, threshold=0.5):
+    # the forced prefix path and the default path (these corpora all have
+    # tiny vocabularies, so the default probe selects the bitset path)
+    # must both agree with the ground truth
     want = _rows(_quadratic(spark, docs, threshold))
-    # cap=0 forces the prefix-filtered path everywhere; the huge cap
-    # forces the quadratic path everywhere; 3 exercises the split with
-    # groups on both sides — all three must agree with the ground truth
-    # (bitset probe disabled so the caps actually select those paths)
-    for cap in (0, 3, 10**9):
-        got = jaccard_similarity_join(
-            _tset(docs), id_col="doc_id", group_col="source",
-            threshold=threshold, quadratic_group_cap=cap,
-            bitset_vocab_cap=0,
-        )
-        assert _rows(got) == want, f"cap={cap}"
-    # the small-universe bitset path (these corpora all have tiny
-    # vocabularies, so the default probe selects it) must agree too
-    got = jaccard_similarity_join(
-        _tset(docs), id_col="doc_id", group_col="source",
-        threshold=threshold,
+    kw = dict(id_col="doc_id", group_col="source", threshold=threshold)
+    prefix = _prefix_rows(_tset(docs), **kw)
+    default = _rows(jaccard_similarity_join(_tset(docs), **kw))
+    assert prefix == want, "prefix"
+    assert default == want, "default"
+
+
+def _probe_base(tset):
+    # the column layout jaccard_similarity_join hands its probe
+    return tset.select(
+        F.col("doc_id").alias("_id"), F.col("tset").alias("_tset")
     )
-    assert _rows(got) == want, "bitset"
 
 
 def _mk(spark, rows):
@@ -68,18 +75,12 @@ def test_matches_quadratic_on_driver_testdata(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     want = _rows(_quadratic(spark, docs, 0.5))
     assert len(want) > 100  # non-trivial corpus
-    for cap in (0, 10**9):  # prefix path and quadratic path
-        got = jaccard_similarity_join(
-            _tset(docs), id_col="doc_id", group_col="source",
-            threshold=0.5, quadratic_group_cap=cap, bitset_vocab_cap=0,
-        )
-        assert _rows(got) == want, f"cap={cap}"
-    # default config: the driver corpus has a 31-token vocabulary, so the
-    # bitset path is the one the declared query actually runs
-    got = jaccard_similarity_join(
-        _tset(docs), id_col="doc_id", group_col="source", threshold=0.5,
-    )
-    assert _rows(got) == want, "bitset"
+    # the driver corpus has a 31-token vocabulary, so the default path is
+    # the bitset path the declared query actually runs
+    assert setsim._small_universe_vocab(_probe_base(_tset(docs))) is not None
+    kw = dict(id_col="doc_id", group_col="source", threshold=0.5)
+    assert _prefix_rows(_tset(docs), **kw) == want, "prefix"
+    assert _rows(jaccard_similarity_join(_tset(docs), **kw)) == want, "bitset"
 
 
 def test_boundary_identical_and_disjoint(spark):
@@ -156,14 +157,15 @@ def test_null_text_and_null_source(spark):
 
 def test_null_token_falls_back_to_array_path(spark):
     # a null element in a token set has no bit in the vocabulary mask:
-    # the probe must send the corpus down the array path, not raise
+    # the probe must send the corpus down the prefix path, not raise
     docs = spark.createDataFrame(
         [(1, "s", ["a", "b", None]), (2, "s", ["a", "b"]),
          (3, "s", ["a", "b", "c"]), (4, "s", ["x"])],
         "doc_id long, source string, tset array<string>",
     )
+    assert setsim._small_universe_vocab(_probe_base(docs)) is None
     kw = dict(id_col="doc_id", group_col="source", threshold=0.5)
-    want = _rows(jaccard_similarity_join(docs, bitset_vocab_cap=0, **kw))
+    want = _prefix_rows(docs, **kw)
     assert want == [(1, 2, 0.6667), (1, 3, 0.5), (2, 3, 0.6667)]
     assert _rows(jaccard_similarity_join(docs, **kw)) == want
 
@@ -190,21 +192,16 @@ def test_streaming_input_rejected(spark, tmp_path):
 
 
 def test_bitset_path_properties(spark):
-    # vocab above the cap falls through to the array paths (same result);
+    # vocab above the cap falls through to the prefix path (same result);
     # a 65-token vocabulary cannot fit a 64-bit mask
     rows = [(i, "s", f"t{i} t{(i + 1) % 65} shared") for i in range(65)]
     docs = _mk(spark, rows)
+    assert setsim._small_universe_vocab(_probe_base(_tset(docs))) is None
     want = _rows(_quadratic(spark, docs, 0.5))
     got = _rows(jaccard_similarity_join(
         _tset(docs), id_col="doc_id", group_col="source", threshold=0.5
     ))
     assert got == want
-    # cap validation
-    with pytest.raises(ValueError):
-        jaccard_similarity_join(
-            _tset(docs), id_col="doc_id", group_col="source",
-            bitset_vocab_cap=65,
-        )
     # groupless bitset join stays an equi-join (constant key), never a
     # cartesian/BNLJ
     small = _mk(spark, [(1, "s1", "a b c"), (2, "s2", "a b c"),
@@ -214,6 +211,40 @@ def test_bitset_path_properties(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert _rows(out) == [(1, 2, 1.0)]
+
+
+def _job_ids(spark):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_bitset_build_side_sized_by_broadcast_threshold(spark, join_threshold):
+    # the bitset path engages while docs x BITSET_ROW_BYTES fits the
+    # broadcast threshold; one doc more takes the prefix path, and a
+    # negative threshold skips the probe without running a job
+    k = 6
+    rows = [(i, "s", f"a b c{i % 3}") for i in range(k + 1)]
+
+    def run(n):
+        docs = _mk(spark, rows[:n])
+        want = _rows(_quadratic(spark, docs, 0.5))
+        before = _job_ids(spark)
+        out = jaccard_similarity_join(
+            _tset(docs), id_col="doc_id", group_col="source", threshold=0.5
+        )
+        probe_jobs = _job_ids(spark) - before
+        assert _rows(out) == want, n
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return "bit_count" in plan, probe_jobs
+
+    with join_threshold(str(k * setsim.BITSET_ROW_BYTES)):
+        bitset, probe_jobs = run(k)
+        assert bitset and probe_jobs
+        assert run(k + 1)[0] is False
+    with join_threshold("-1"):
+        assert run(k) == (False, set())
 
 
 def test_plan_has_no_quadratic_join(spark):

@@ -93,6 +93,10 @@ class DedupConfig:
 
     # --- misc ---
     seed: int = 42
+    # never read by the engine (get_spark and the job CLI set
+    # spark.sql.shuffle.partitions); kept because benchmark workloads,
+    # tests and scripts pass it and checkpoint manifests compare
+    # asdict(config)
     shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:

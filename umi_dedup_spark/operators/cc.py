@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.session import parse_size_bytes
+from umi_dedup_spark.session import broadcast_row_cap
 
 # Bytes of one label row (fam, struct(nc, tb, fam)) as an UnsafeRow: an
 # 8-byte null bitset and two 8-byte slots, plus the nested struct's own
@@ -41,10 +41,8 @@ def labels_fit_broadcast(spark: SparkSession, n_nodes: int) -> bool:
     """True when a label table of ``n_nodes`` rows fits the session's
     ``spark.sql.autoBroadcastJoinThreshold`` (negative = disabled: the
     planner then chooses every join itself)."""
-    threshold = parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    )
-    return n_nodes * LABEL_ROW_BYTES <= threshold
+    cap = broadcast_row_cap(spark, LABEL_ROW_BYTES)
+    return cap is not None and n_nodes <= cap
 
 
 def _pack(count_col, tb_col, fam_col):

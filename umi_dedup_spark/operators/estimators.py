@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from umi_dedup_spark.operators.representative import range_bucket
+
 
 # ---------------------------------------------------------------- E5
 def apportion(counts: list[int] | np.ndarray, target: int) -> np.ndarray:
@@ -463,9 +465,6 @@ def survivor_spec(
     )
 
 
-_SIGN_BIT = -0x8000000000000000  # xor maps signed int64 order onto unsigned order
-
-
 def cluster_survivor_counts(
     clustered_fams: DataFrame, spec: DataFrame, n_range_buckets: int = 64
 ) -> DataFrame:
@@ -489,7 +488,6 @@ def cluster_survivor_counts(
     """
     from pyspark.sql import Window
 
-    shift = 64 - max(1, (n_range_buckets - 1).bit_length())
     joined = (
         clustered_fams.select("cluster_id", "norm_hash", "fam_count", "fam_tb")
         .join(spec.select("cluster_id", "fam_count", "keep_base", "n_extra"),
@@ -504,8 +502,7 @@ def cluster_survivor_counts(
     )
 
     extra = joined.filter(F.col("n_extra") > 0).withColumn(
-        "rb",
-        F.shiftrightunsigned(F.col("fam_tb").bitwiseXOR(F.lit(_SIGN_BIT)), shift),
+        "rb", range_bucket("fam_tb", n_range_buckets)
     )
     bucket_counts = extra.groupBy("cluster_id", "fam_count", "rb").agg(
         F.count(F.lit(1)).alias("bc")

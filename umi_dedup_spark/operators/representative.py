@@ -17,7 +17,7 @@ Maps reference semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -32,6 +32,15 @@ def cluster_table(fams: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 _SIGN_BIT = -0x8000000000000000  # xor maps signed int64 order to unsigned
+
+
+def range_bucket(col: str, n_buckets: int) -> Column:
+    """Order-preserving range bucket of an int64 column: its top
+    ``bit_length(n_buckets - 1)`` bits read as unsigned, i.e.
+    ``n_buckets`` rounded up to a power of two contiguous value ranges.
+    Equal values share a bucket and bucket order is value order."""
+    shift = 64 - max(1, (n_buckets - 1).bit_length())
+    return F.shiftrightunsigned(F.col(col).bitwiseXOR(F.lit(_SIGN_BIT)), shift)
 
 
 def mark_survivors(
@@ -79,10 +88,8 @@ def mark_survivors(
         )
 
     pc = list(partition_cols)
-    shift = 64 - max(1, (n_range_buckets - 1).bit_length())
     d = docs_with_cluster.withColumn(
-        "_kb",
-        F.shiftrightunsigned(F.col("doc_key").bitwiseXOR(F.lit(_SIGN_BIT)), shift),
+        "_kb", range_bucket("doc_key", n_range_buckets)
     )
     bcounts = d.groupBy(*pc, "quality", "_kb").agg(F.count(F.lit(1)).alias("_bc"))
     w_off = (

@@ -1,4 +1,5 @@
-"""Exact token-set similarity join (Jaccard >= t) via prefix filtering.
+"""Exact token-set similarity join (Jaccard >= t): a small-universe bitset
+path and a prefix-filtered path.
 
 Graft analog of the reference's within-scope pairwise comparison surface
 (the J-series equi-join, ``lib/markdup_sam.py:64`` grouping scope +
@@ -38,20 +39,10 @@ agg): no Python in the hot path, no cartesian product, shuffles keyed on
 (group, token) and candidate ids only — full token arrays ride exactly
 two joins, both restricted to candidate pairs.
 
-**Adaptive split** (a per-group size cap, like the all-pairs cap in
-``lsh.candidate_pairs``): for groups at or below ``quadratic_group_cap``
-documents, the within-group all-pairs join is CHEAPER than the
-inverted-index plan — one shuffle co-locates the group, and when the
-output density is high (boilerplate-heavy web sources) prefix filtering
-prunes almost nothing while paying its own shuffles (measured at sf0.1:
-13.8s pure-prefix vs 10.1s quadratic on 250-doc groups with 71% of all
-pairs qualifying). Groups above the cap take the prefix-filtered path,
-where |group|^2 stops being computable. Both paths produce identical,
-exact output, so the cap is purely a physical-plan knob.
-
 **Small-universe bitset path** (r6): when the corpus's GLOBAL distinct
-token count fits in one machine word (``bitset_vocab_cap``, default 64)
-and the doc count is broadcastable (``bitset_build_cap``), every token
+token count fits in one machine word (``BITSET_VOCAB_CAP`` = 64 tokens)
+and the doc table fits the session's broadcast threshold (rows x
+``BITSET_ROW_BYTES``), every token
 set is encoded as a 64-bit mask (bit i = contains vocab[i]) and the
 exact intersection size per pair is ``bit_count(ma & mb)`` — O(1)
 instead of an O(|x|+|y|) string-hashing ``array_intersect``. Pair
@@ -63,12 +54,16 @@ the prefix index degenerates: every token is ultra-frequent, candidate
 generation emits hundreds of millions of rows that dedup right back to
 the quadratic pair set). The encoding is a bijection token<->bit over
 the COMPLETE vocabulary, so ji/na/nb — and hence the IEEE jaccard
-double — are exactly those of the array paths. The probe is staged so
+double — are exactly those of the prefix path. The probe is staged so
 its cost on general data is negligible: a 2000-doc sample vocabulary
 first (a real text corpus blows the cap immediately and falls through
 to the prefix path), the full distinct-token check only after the
 sample passes. Measured at sf1.0 (50k docs, 31-token vocab, 44.3M
 qualifying pairs): 156s prefix+quad union -> see OPTIMIZATION_r06.md.
+
+The two paths are chosen from the data and the broadcast threshold
+alone, and both are exact for every group size; the driver testdata has
+a 31-token vocabulary at every scale, so it runs the bitset path.
 """
 
 from __future__ import annotations
@@ -78,11 +73,27 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.session import spread_small_scan
+from umi_dedup_spark.session import broadcast_row_cap, spread_small_scan
 
 # conservative guard against float round-up at exact multiples: erring
 # DOWN lengthens the prefix (more candidates, never a missed pair)
 _EPS = 1e-9
+
+# the bitset path's vocabulary bound: one token per bit of a long mask
+BITSET_VOCAB_CAP = 64
+
+# Bytes of one bitset build-side row (group, id, size, mask) in the
+# broadcast hash relation, assuming a group key of at most 8 bytes: the
+# value row is an 8-byte null bitset, four 8-byte slots and the key's
+# 8 bytes (48); the key row is a bitset, one slot and the key (24); the
+# map adds 16 bytes of length headers and next pointer per record, and
+# its hash array holds 2-4 slots of 16 bytes per row (32-64). That is
+# 120-152 bytes. Measured (BroadcastExchange dataSize, 2,000 groups of
+# <= 5-byte keys): 21.0 MB at 100k rows, 67.1 MB at 400k, 154 bytes per
+# row at the margin; rounded up to 160. The relation is allocated in
+# whole memory pages, so a small table takes one page (~17-34 MB) at
+# any row count: this width bounds the growth, not the first page.
+BITSET_ROW_BYTES = 160
 
 
 def _verify_jaccard(pairs: DataFrame, t: float) -> DataFrame:
@@ -98,31 +109,37 @@ def _verify_jaccard(pairs: DataFrame, t: float) -> DataFrame:
     )
 
 
-def _small_universe_vocab(
-    base: DataFrame, vocab_cap: int, build_cap: int
-) -> list[str] | None:
+def _small_universe_vocab(base: DataFrame) -> list[str] | None:
     """Return the sorted complete vocabulary iff the corpus qualifies for
-    the bitset path, else None. Probes cheapest-first so general (large-
-    vocab) data pays only a bounded sample scan: (1) vocabulary of a
-    2000-doc sample — real text exceeds ``vocab_cap`` here and exits;
-    (2) incremental doc-count check against ``build_cap`` (CollectLimit
-    scans partitions incrementally, not the whole input); (3) the full
-    distinct-token scan, only when both cheap probes pass. A null token
-    has no bit of its own, so it disqualifies the bitset path too."""
+    the bitset path, else None. A negative broadcast threshold disables
+    the path before any job runs. Otherwise the probe runs cheapest-first
+    so general (large-vocab) data pays only a bounded sample scan: (1)
+    vocabulary of a 2000-doc sample — real text exceeds
+    ``BITSET_VOCAB_CAP`` here and exits; (2) incremental doc-count check
+    against the rows that fit the broadcast threshold (CollectLimit scans
+    partitions incrementally, not the whole input); (3) the full
+    distinct-token scan, only when both cheap probes pass. The worst case
+    — a small sample vocabulary over a large full one — costs one
+    tokenize + distinct scan of the corpus (the limit cannot
+    short-circuit the aggregation) before the prefix path runs. A null
+    token has no bit of its own, so it disqualifies the bitset path too."""
+    row_cap = broadcast_row_cap(base.sparkSession, BITSET_ROW_BYTES)
+    if row_cap is None:
+        return None
     sample_vocab = (
         base.select("_tset").limit(2000)
         .select(F.explode("_tset").alias("_tok")).distinct().count()
     )
-    if sample_vocab > vocab_cap:
+    if sample_vocab > BITSET_VOCAB_CAP:
         return None
-    if base.select("_id").limit(build_cap + 1).count() > build_cap:
+    if base.select("_id").limit(row_cap + 1).count() > row_cap:
         return None
     rows = (
         base.select(F.explode("_tset").alias("_tok"))
-        .distinct().limit(vocab_cap + 1).collect()
+        .distinct().limit(BITSET_VOCAB_CAP + 1).collect()
     )
     toks = [r["_tok"] for r in rows]
-    if len(toks) > vocab_cap or None in toks:
+    if len(toks) > BITSET_VOCAB_CAP or None in toks:
         return None
     return sorted(toks)
 
@@ -161,7 +178,7 @@ def _bitset_join(
     # reuse applies), so without it the tokenize+mask chain executes
     # twice and the probe side re-tokenizes inside the join stage.
     # Measured at 50k docs: full join 1.8-3.4s -> 0.69-0.75s. Narrow
-    # rows (id, group, size, one long) bounded by bitset_build_cap;
+    # rows (id, group, size, one long) bounded by the broadcast threshold;
     # blocks are ContextCleaner-reclaimed with the result's lineage.
     enc = enc.localCheckpoint(eager=False)
     # probe-side parallelism comes from jaccard_similarity_join's
@@ -188,112 +205,10 @@ def _bitset_join(
     )
 
 
-def jaccard_similarity_join(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    tokens_col: str = "tset",
-    group_col: str | None = None,
-    threshold: float = 0.5,
-    quadratic_group_cap: int = 1024,
-    bitset_vocab_cap: int = 64,
-    bitset_build_cap: int = 2_000_000,
-) -> DataFrame:
-    """All pairs (a_id < b_id) with distinct-token Jaccard >= threshold.
-
-    ``docs`` must carry one row per document: an orderable unique
-    ``id_col``, an array<string> ``tokens_col`` of DISTINCT tokens, and
-    optionally a ``group_col`` restricting pairs to equal groups (rows
-    with a null group match nothing, as in an SQL equi-join).
-
-    Returns (a_id, b_id, jaccard) with jaccard rounded to 4 places; the
-    threshold is applied to the unrounded double, matching the SQL
-    surface ``round(cast(ji as double)/(na+nb-ji), 4)``.
-
-    ``quadratic_group_cap``: groups with at most this many documents run
-    the co-located all-pairs join; larger groups run the prefix-filtered
-    inverted-index plan (see module docstring). 0 forces the prefix path
-    everywhere; the split requires ``group_col`` (without one the whole
-    corpus is a single group and only the prefix path is safe at scale).
-    The default bounds within-group pair fan-out at ~500k pairs/group.
-
-    ``bitset_vocab_cap`` / ``bitset_build_cap``: when the corpus's total
-    distinct-token count is at most ``bitset_vocab_cap`` (<= 64: one
-    machine word) and the doc count at most ``bitset_build_cap`` (the
-    broadcast-side bound), ALL groups take the small-universe bitset
-    path (see module docstring) — identical exact output, O(1) per-pair
-    verification, one broadcast join. ``bitset_vocab_cap=0`` disables
-    the probe entirely.
-
-    Batch-only and partly eager: the bitset-path vocabulary probe runs
-    Spark jobs while the plan is built, before the caller's action. A
-    streaming ``docs`` raises ``ValueError`` (no output mode could run the
-    plan anyway: it aggregates without a watermark and joins two streams).
-    """
-    if docs.isStreaming:
-        raise ValueError(
-            "jaccard_similarity_join is batch-only; got a streaming DataFrame"
-        )
-    t = float(threshold)
-    if not 0.0 < t <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    gcols = [group_col] if group_col else []
-
-    base = docs.select(
-        F.col(id_col).alias("_id"),
-        *[F.col(c).alias("_grp") for c in gcols],
-        F.col(tokens_col).alias("_tset"),
-    ).withColumn("_sz", F.size("_tset"))
-    grp = ["_grp"] if gcols else []
-
-    if bitset_vocab_cap > 0:
-        if not 0 < bitset_vocab_cap <= 64:
-            raise ValueError(
-                f"bitset_vocab_cap must be in [0, 64], got {bitset_vocab_cap}"
-            )
-        # probes run on the UNSPREAD base: their limits stay cheap (a
-        # round-robin exchange would force the full shuffle under a
-        # limit), and they only read token/id columns
-        vocab = _small_universe_vocab(base, bitset_vocab_cap, bitset_build_cap)
-    else:
-        vocab = None
-
-    # per-row work above this point (mask encoding, prefix explode,
-    # verification) would run on one core for a one-row-group input.
-    # The tokens expression lives in the caller's projection, below this
-    # spread: callers with unsplittable small inputs should spread the
-    # raw rows before projecting (see __spark_entry__._ngram_jaccard).
-    base = spread_small_scan(base)
-
-    if vocab is not None:
-        return _bitset_join(base, vocab, grp, t)
-
-    split = bool(gcols) and quadratic_group_cap > 0
-    if split:
-        # group sizes: a tiny (one row per group) aggregate joined back —
-        # broadcastable whenever the group count is modest, and a plain
-        # narrow-key equi-join otherwise
-        gsz = base.groupBy("_grp").agg(F.count(F.lit(1)).alias("_gsz"))
-        base = base.join(gsz, "_grp")
-    quad = None
-    if split:
-        small = base.filter(F.col("_gsz") <= quadratic_group_cap)
-        base = base.filter(F.col("_gsz") > quadratic_group_cap)
-        a = small.select(
-            "_grp", F.col("_id").alias("a_id"), F.col("_tset").alias("_aset")
-        )
-        b = small.select(
-            "_grp", F.col("_id").alias("b_id"), F.col("_tset").alias("_bset")
-        )
-        quad = _verify_jaccard(
-            a.join(b, "_grp").filter(F.col("a_id") < F.col("b_id")), t
-        )
-
-    # 1. global token frequencies -> total order (freq asc, token asc).
-    # Counted over the prefix-path (big-group) docs only: the theorem
-    # holds under ANY fixed total order; frequency ordering is purely a
-    # candidate-minimization heuristic, so restricting the count to the
-    # docs this path actually joins is both cheaper and sharper.
+def _prefix_join(base: DataFrame, grp: list[str], t: float) -> DataFrame:
+    """The prefix-filtered inverted-index join (module docstring, steps
+    1-4); exact for every group size and vocabulary."""
+    # 1. global token frequencies -> total order (freq asc, token asc)
     tok = base.select(*grp, "_id", "_sz", F.explode("_tset").alias("_tok"))
     freq = tok.groupBy("_tok").agg(F.count(F.lit(1)).alias("_tf"))
 
@@ -330,5 +245,67 @@ def jaccard_similarity_join(
     # 4. exact verification on candidates only
     av = base.select(F.col("_id").alias("a_id"), F.col("_tset").alias("_aset"))
     bv = base.select(F.col("_id").alias("b_id"), F.col("_tset").alias("_bset"))
-    out = _verify_jaccard(cand.join(av, "a_id").join(bv, "b_id"), t)
-    return out.unionByName(quad) if quad is not None else out
+    return _verify_jaccard(cand.join(av, "a_id").join(bv, "b_id"), t)
+
+
+def jaccard_similarity_join(
+    docs: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    tokens_col: str = "tset",
+    group_col: str | None = None,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """All pairs (a_id < b_id) with distinct-token Jaccard >= threshold.
+
+    ``docs`` must carry one row per document: an orderable unique
+    ``id_col``, an array<string> ``tokens_col`` of DISTINCT tokens, and
+    optionally a ``group_col`` restricting pairs to equal groups (rows
+    with a null group match nothing, as in an SQL equi-join).
+
+    Returns (a_id, b_id, jaccard) with jaccard rounded to 4 places; the
+    threshold is applied to the unrounded double, matching the SQL
+    surface ``round(cast(ji as double)/(na+nb-ji), 4)``.
+
+    A corpus whose whole vocabulary fits ``BITSET_VOCAB_CAP`` tokens and
+    whose doc table fits ``spark.sql.autoBroadcastJoinThreshold`` (at
+    ``BITSET_ROW_BYTES`` per doc) takes the small-universe bitset path;
+    every other corpus takes the prefix-filtered path (see module
+    docstring). Both return identical, exact output.
+
+    Batch-only and partly eager: the bitset-path vocabulary probe runs
+    Spark jobs while the plan is built, before the caller's action. A
+    streaming ``docs`` raises ``ValueError`` (no output mode could run the
+    plan anyway: it aggregates without a watermark and joins two streams).
+    """
+    if docs.isStreaming:
+        raise ValueError(
+            "jaccard_similarity_join is batch-only; got a streaming DataFrame"
+        )
+    t = float(threshold)
+    if not 0.0 < t <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    gcols = [group_col] if group_col else []
+
+    base = docs.select(
+        F.col(id_col).alias("_id"),
+        *[F.col(c).alias("_grp") for c in gcols],
+        F.col(tokens_col).alias("_tset"),
+    ).withColumn("_sz", F.size("_tset"))
+    grp = ["_grp"] if gcols else []
+
+    # probes run on the UNSPREAD base: their limits stay cheap (a
+    # round-robin exchange would force the full shuffle under a limit),
+    # and they only read token/id columns
+    vocab = _small_universe_vocab(base)
+
+    # per-row work above this point (mask encoding, prefix explode,
+    # verification) would run on one core for a one-row-group input.
+    # The tokens expression lives in the caller's projection, below this
+    # spread: callers with unsplittable small inputs should spread the
+    # raw rows before projecting (see __spark_entry__._ngram_jaccard).
+    base = spread_small_scan(base)
+
+    if vocab is not None:
+        return _bitset_join(base, vocab, grp, t)
+    return _prefix_join(base, grp, t)

@@ -106,6 +106,37 @@ def make_cell_udf(centroids: np.ndarray, nprobe: int):
     return cell_udf
 
 
+def _pick_centroids(
+    vectors: DataFrame, n_cells: int, seed: int, id_col: str, vec_col: str,
+    centroid_ids: list[int] | None, caller: str,
+) -> np.ndarray:
+    """Deterministic centroid sample, as an (n_cells, dim) matrix:
+    explicit ``centroid_ids`` when given (cell index = rank of the id —
+    SQL-mirrorable), else the ``n_cells`` smallest xxhash64(id, seed).
+    ``caller`` names the operator in the missing-id error."""
+    rows = vectors.select(F.col(id_col), F.col(vec_col))
+    if centroid_ids is not None:
+        cent_rows = (
+            rows.filter(F.col(id_col).isin(list(centroid_ids)))
+            .orderBy(id_col)
+            .collect()
+        )
+        if len(cent_rows) != len(centroid_ids):
+            missing = sorted(set(centroid_ids) - {r[0] for r in cent_rows})
+            raise ValueError(
+                f"{caller}: centroid_ids not found in {id_col}: "
+                f"{missing} — cell indices would silently shift"
+            )
+    else:
+        cent_rows = (
+            rows.withColumn("_h", F.xxhash64(F.col(id_col), F.lit(seed)))
+            .orderBy("_h")
+            .limit(n_cells)
+            .collect()
+        )
+    return np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in cent_rows])
+
+
 def ivf_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 10,
     n_cells: int = 64, nprobe: int = 8, seed: int = 42,
@@ -123,30 +154,9 @@ def ivf_topk(
     Shuffled bytes scale with nprobe/n_cells of the corpus per query
     rather than the full corpus (brute force).
     """
-    # deterministic centroid sample: explicit ids when given (cell index =
-    # rank of the id — SQL-mirrorable), else smallest xxhash64(vec_id, seed)
-    if centroid_ids is not None:
-        cent_rows = (
-            corpus.select(F.col(id_col), F.col(vec_col))
-            .filter(F.col(id_col).isin(list(centroid_ids)))
-            .orderBy(id_col)
-            .collect()
-        )
-        if len(cent_rows) != len(centroid_ids):
-            missing = sorted(set(centroid_ids) - {r[0] for r in cent_rows})
-            raise ValueError(
-                f"ivf_topk: centroid_ids not found in {id_col}: "
-                f"{missing} — cell indices would silently shift"
-            )
-    else:
-        cent_rows = (
-            corpus.select(F.col(id_col), F.col(vec_col))
-            .withColumn("_h", F.xxhash64(F.col(id_col), F.lit(seed)))
-            .orderBy("_h")
-            .limit(n_cells)
-            .collect()
-        )
-    centroids = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in cent_rows])
+    centroids = _pick_centroids(
+        corpus, n_cells, seed, id_col, vec_col, centroid_ids, "ivf_topk"
+    )
 
     assign1 = make_cell_udf(centroids, 1)
     assignp = make_cell_udf(centroids, nprobe)
@@ -205,28 +215,9 @@ def semdedup_mark(
     would pass k-means centroids in the same shape). AQE skew-split
     handles an over-dense cell's join skew.
     """
-    if centroid_ids is not None:
-        cent_rows = (
-            vectors.select(F.col(id_col), F.col(vec_col))
-            .filter(F.col(id_col).isin(list(centroid_ids)))
-            .orderBy(id_col)
-            .collect()
-        )
-        if len(cent_rows) != len(centroid_ids):
-            missing = sorted(set(centroid_ids) - {r[0] for r in cent_rows})
-            raise ValueError(
-                f"semdedup_mark: centroid_ids not found in {id_col}: "
-                f"{missing} — cell indices would silently shift"
-            )
-    else:
-        cent_rows = (
-            vectors.select(F.col(id_col), F.col(vec_col))
-            .withColumn("_h", F.xxhash64(F.col(id_col), F.lit(seed)))
-            .orderBy("_h")
-            .limit(n_cells)
-            .collect()
-        )
-    centroids = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in cent_rows])
+    centroids = _pick_centroids(
+        vectors, n_cells, seed, id_col, vec_col, centroid_ids, "semdedup_mark"
+    )
 
     assign1 = make_cell_udf(centroids, 1)
     assigned = vectors.select(

@@ -90,6 +90,16 @@ def parse_size_bytes(s: str) -> int:
     return int(m.group(1)) * _SIZE_UNITS[m.group(2)]
 
 
+def broadcast_row_cap(spark: SparkSession, row_bytes: int) -> int | None:
+    """Most rows of ``row_bytes`` each that fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; None when the threshold is
+    negative (broadcasting disabled: the planner chooses every join)."""
+    threshold = parse_size_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
+    return None if threshold < 0 else threshold // row_bytes
+
+
 def _driver_java_opts(extra_conf: dict[str, str] | None, heap: str) -> str:
     """Compose the pre-touch defaults with caller-supplied JVM opts.
 
