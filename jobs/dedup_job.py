@@ -125,10 +125,7 @@ def main(argv=None):
 
     write_table(res.marked, f"{args.output}/marked", stage="marked_out", config=cfg)
     write_table(res.clusters, f"{args.output}/clusters", stage="clusters_out", config=cfg)
-    from functools import reduce
-
-    lineage = reduce(lambda a, b: a.unionByName(b), pipe.lineage)
-    write_table(lineage, f"{args.output}/lineage", stage="lineage_out", config=cfg)
+    write_table(pipe.lineage(), f"{args.output}/lineage", stage="lineage_out", config=cfg)
 
     summary = pipe.summary(res)
     print(json.dumps(summary))

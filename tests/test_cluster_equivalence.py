@@ -15,7 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from umi_dedup_spark import oracle
+import oracle
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import (
     minhash_signature,

@@ -10,6 +10,8 @@ import datetime as dt
 import json
 import os
 
+from pyspark.sql import functions as F
+
 from jobs.dedup_job import main as job_main
 from umi_dedup_spark.synth import make_pages
 
@@ -17,8 +19,6 @@ from umi_dedup_spark.synth import make_pages
 def _write_corpus_with_refetches(spark, tmp_path):
     pages = make_pages(n_docs=120, seed=7, hot_band_size=10).to_spark(spark)
     # re-fetch 5 urls: same url, NEWER warc_ts, different text bytes
-    from pyspark.sql import functions as F
-
     refetch = (
         pages.orderBy("url").limit(5)
         .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS"))
@@ -60,3 +60,16 @@ def test_default_keeps_refetches(spark, tmp_path, capsys):
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["library"]["total"] == n_base + n_refetch
+
+    # one lineage row per non-empty (stage, partition), built from every
+    # stage the run recorded, the lazy labels stage included; no bucket
+    # overflows here, so the empty pairs_overflow stage has no row
+    lineage = spark.read.parquet(str(tmp_path / "out_plain" / "lineage"))
+    rows = {
+        r["stage"]: r["rows"]
+        for r in lineage.groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
+    }
+    assert set(rows) == {
+        "docs", "families", "pairs", "edges", "labels", "clusters", "marked",
+    }
+    assert rows["docs"] == rows["marked"] == n_base + n_refetch

@@ -15,7 +15,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from umi_dedup_spark import oracle
+import oracle
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.operators.cc import (
     LABEL_ROW_BYTES,

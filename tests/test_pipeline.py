@@ -132,3 +132,30 @@ def test_run_leaves_one_persisted_rdd_per_stage(spark, corpus, algorithm):
         stages.add("survivor_spec")
     assert set(pipe.stage_rows) == stages
     assert len(persisted() - before) == len(pipe.stage_rows) + 1
+
+
+def test_lineage_built_only_on_demand(spark, corpus, monkeypatch):
+    # run() only records each stage's table; the per-partition lineage
+    # plans are built when lineage() is asked for, once per stage
+    import umi_dedup_spark.plans.pipeline as pl
+
+    calls = []
+    orig = pl.partition_lineage
+
+    def counted(df, stage):
+        calls.append(stage)
+        return orig(df, stage)
+
+    monkeypatch.setattr(pl, "partition_lineage", counted)
+    pipe = DedupPipeline(spark, CFG)
+    res = pipe.run(corpus.to_spark(spark))
+    assert calls == []
+    lineage = pipe.lineage()
+    assert calls == list(res.stage_times)
+    rows = {
+        r["stage"]: r["rows"]
+        for r in lineage.groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
+    }
+    # an empty stage (no overflow bucket here) has no partition rows
+    assert set(rows) <= set(res.stage_times)
+    assert {s: rows.get(s, 0) for s in pipe.stage_rows} == pipe.stage_rows

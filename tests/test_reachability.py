@@ -1,0 +1,72 @@
+"""Every top-level function and class in the package is reached from
+outside its own body by code that is not a test.
+
+The scan parses every ``.py`` file of the repository except the test
+trees and dot-directories, and counts a name as referenced when it
+appears as a ``Name``, an ``Attribute``, an import alias or a string
+constant that is an identifier (the benchmark harness wraps operators by
+name). A package function that only tests call belongs under ``tests/``.
+"""
+
+from __future__ import annotations
+
+import ast
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PACKAGE = "umi_dedup_spark"
+
+# per-row reference implementations kept beside the code they certify
+EXEMPT = {
+    "deduplicate_counts",  # tests/test_estimators.py, tests/test_round2_hardening.py
+    "suffix_array_lcs",  # tests/test_suffix.py
+}
+
+
+def _sources(root: Path):
+    for path in sorted(root.rglob("*.py")):
+        parts = path.relative_to(root).parts
+        if any(p.startswith(".") for p in parts[:-1]):
+            continue
+        if parts[0] == "tests" or parts[:2] == ("perfbench", "tests"):
+            continue
+        yield parts, ast.parse(path.read_text(), str(path))
+
+
+def _names(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            out.add(n.value)
+    return out
+
+
+def unreached(root: Path = ROOT) -> list[str]:
+    """``module:name`` of each package def/class no other top-level
+    statement of a non-test file references."""
+    uses: Counter[str] = Counter()
+    defs = []
+    for parts, tree in _sources(root):
+        for stmt in tree.body:
+            names = _names(stmt)
+            uses.update(names)
+            if parts[0] == PACKAGE and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                defs.append(("/".join(parts), stmt.name, stmt.name in names))
+    return [
+        f"{mod}:{name}"
+        for mod, name, self_ref in defs
+        if uses[name] - self_ref == 0 and name not in EXEMPT
+    ]
+
+
+def test_every_package_def_is_reached():
+    assert unreached() == []

@@ -102,16 +102,11 @@ def write_table(
     *,
     stage: str,
     config: DedupConfig | None = None,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    extra: dict[str, Any] | None = None,
 ) -> int:
     """Write a stage snapshot + manifest; returns row count written."""
     spark = df.sparkSession
     t0 = time.time()
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    writer = df.write.mode("overwrite")
     if _iceberg_available(spark) and not path_or_tbl.startswith("/"):
         writer.format("iceberg").saveAsTable(path_or_tbl)
         n = spark.read.format("iceberg").load(path_or_tbl).count()
@@ -125,27 +120,9 @@ def write_table(
         "complete": True,
         "config": asdict(config) if config else None,
         "dialect": HASH_DIALECT,
-        "extra": extra or {},
     }
     _write_manifest(spark, path_or_tbl, manifest)
     return n
-
-
-def write_frequency_table(df: DataFrame, path: str) -> None:
-    """S6 (reference ``make_frequency_table.py:25``): emit the fingerprint
-    frequency table as tab-separated ``key \\t count`` — the graft of the
-    UMI table format (``lib/umi_data.py:105-119``)."""
-    df.select("norm_hash", "fam_count").write.mode("overwrite").option(
-        "sep", "\t"
-    ).csv(path)
-
-
-def read_frequency_table(spark: SparkSession, path: str) -> DataFrame:
-    """S5: parse ``key \\t count`` lines into a frequency DataFrame;
-    malformed/short lines tolerated (dropped), mirroring the reference's
-    lenient parse (``lib/umi_data.py:105-119``)."""
-    df = spark.read.option("sep", "\t").schema("norm_hash long, fam_count long").csv(path)
-    return df.filter("norm_hash is not null and fam_count is not null")
 
 
 def stage_complete(path: str, config: DedupConfig | None = None) -> bool:

@@ -15,7 +15,7 @@
                                                  shuffle each while the labels
                                                  broadcast)
     -> representative / estimator / survivors   (window + applyInPandas)
-    -> map-back join, metrics, lineage          (broadcast-ish join)
+    -> map-back join, metrics                   (broadcast-ish join)
     -> write marked corpus + clusters + metrics
 
 Each stage optionally snapshots to a checkpoint table with a manifest;
@@ -31,6 +31,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -81,7 +82,8 @@ class DedupPipeline:
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.checkpoint_dir = checkpoint_dir
-        self.lineage: list[DataFrame] = []
+        # stage name -> its DataFrame, in run order; lineage() reads it
+        self._stage_dfs: dict[str, DataFrame] = {}
         self.stage_rows: dict[str, int] = {}
         # always defined, even on fully-resumed runs (overflow is persisted
         # as its own checkpoint stage, so resume restores it)
@@ -95,7 +97,7 @@ class DedupPipeline:
         return os.path.join(self.checkpoint_dir, stage)
 
     def _stage(self, stage: str, df_fn, resume: bool, materialize: bool = True) -> DataFrame:
-        """Run (or resume) a stage; snapshot + lineage when checkpointing.
+        """Run (or resume) a stage; snapshot when checkpointing.
 
         materialize=False: the stage feeds exactly one downstream consumer
         — return it lazily (no checkpoint, no eager count) so Spark fuses it
@@ -104,7 +106,8 @@ class DedupPipeline:
         """
         path = self._ckpt_path(stage)
         if path and resume and dio.stage_complete(path, self.cfg):
-            return dio.read_table(self.spark, path)
+            self._stage_dfs[stage] = dio.read_table(self.spark, path)
+            return self._stage_dfs[stage]
         df = df_fn()
         if path:
             dio.write_table(df, path, stage=stage, config=self.cfg)
@@ -143,13 +146,23 @@ class DedupPipeline:
                 eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
             )
             self.stage_rows[stage] = obs.get["rows"]
-        self.lineage.append(partition_lineage(df, stage))
+        self._stage_dfs[stage] = df
         return df
+
+    def lineage(self) -> DataFrame:
+        """Per-partition row counts of every stage the last run recorded,
+        resumed and lazy ones included. Built on demand: each stage's
+        plan costs driver round trips, and only the job CLI writes it."""
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [partition_lineage(df, name) for name, df in self._stage_dfs.items()],
+        )
 
     # -- the plan ------------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = False) -> PipelineResult:
         cfg = self.cfg
         times: dict[str, float] = {}
+        self._stage_dfs = {}
 
         def timed(name, fn, materialize: bool = True):
             t0 = time.time()
