@@ -63,13 +63,18 @@ def test_default_keeps_refetches(spark, tmp_path, capsys):
 
     # one lineage row per non-empty (stage, partition), built from every
     # stage the run recorded, the lazy labels stage included; no bucket
-    # overflows here, so the empty pairs_overflow stage has no row
+    # overflows here, so the empty pairs_overflow stage has one row with
+    # 0 rows and a null pid
     lineage = spark.read.parquet(str(tmp_path / "out_plain" / "lineage"))
     rows = {
         r["stage"]: r["rows"]
         for r in lineage.groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
     }
     assert set(rows) == {
-        "docs", "families", "pairs", "edges", "labels", "clusters", "marked",
+        "docs", "families", "pairs", "pairs_overflow", "edges", "labels",
+        "clusters", "marked",
     }
+    assert rows["pairs_overflow"] == 0
+    empty = lineage.filter(F.col("stage") == "pairs_overflow").collect()
+    assert [(r["pid"], r["rows"]) for r in empty] == [(None, 0)]
     assert rows["docs"] == rows["marked"] == n_base + n_refetch

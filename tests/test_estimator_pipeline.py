@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.plans.pipeline import DedupPipeline
 from umi_dedup_spark.synth import make_pages
+from test_round3_hardening import _oracle_n_keep
 
 
 @pytest.fixture(scope="module")
@@ -45,6 +46,28 @@ def test_estimator_modes_run_and_bound_survivors(spark, corpus, algo):
     assert per_fam == 0
     # every family with >= 1 doc in a cluster still has its rows present
     assert marked.count() == n
+    # every doc's rep_url is a non-duplicate member of its own cluster
+    reps = marked.filter(~F.col("is_duplicate")).select(
+        F.col("cluster_id").alias("c2"), F.col("url").alias("u2")
+    )
+    on = (F.col("cluster_id") == F.col("c2")) & (F.col("rep_url") == F.col("u2"))
+    assert marked.join(reps, on, "left_anti").count() == 0
+    if algo == "weighted_average2":
+        # brute force: the family's n_keep from the estimator oracle, then
+        # the first n_keep docs by (quality desc, doc_key asc) survive
+        fams = res.clusters.select("cluster_id", "norm_hash", "fam_count", "fam_tb")
+        n_keep = _oracle_n_keep(
+            [tuple(r) for r in fams.collect()], algo, cfg.keyspace_size
+        )
+        by_family: dict[tuple, list] = {}
+        for r in marked.select(
+            "cluster_id", "norm_hash", "quality", "doc_key", "is_duplicate"
+        ).collect():
+            by_family.setdefault((r[0], r[1]), []).append(r)
+        for fam, docs in by_family.items():
+            docs.sort(key=lambda r: (-r["quality"], r["doc_key"]))
+            for i, r in enumerate(docs):
+                assert r["is_duplicate"] == (i >= n_keep[fam]), (fam, i, n_keep[fam])
 
 
 def test_naive_keeps_exactly_one_per_cluster(spark, corpus):

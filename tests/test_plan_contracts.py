@@ -237,3 +237,72 @@ def test_stage_counts_rows_inside_its_checkpoint(spark, shape):
     )
     assert pipe.stage_rows == {shape: 10 if shape == "one_shuffle" else 0}
     assert len(staged) == len(bare), (sorted(staged), sorted(bare))
+
+
+def _marked_plan(spark, monkeypatch, algorithm):
+    """The optimized plan of a pipeline run's ``marked`` stage, attribute
+    ids normalized (``doc_key#123L`` -> ``doc_key#L``)."""
+    from umi_dedup_spark.plans.pipeline import DedupPipeline
+    from umi_dedup_spark.synth import make_pages
+
+    plans = {}
+    stage = DedupPipeline._stage
+
+    def capture(self, name, df_fn, resume, materialize=True):
+        def build():
+            df = df_fn()
+            plans[name] = df._jdf.queryExecution().optimizedPlan().toString()
+            return df
+
+        return stage(self, name, build, resume, materialize)
+
+    monkeypatch.setattr(DedupPipeline, "_stage", capture)
+    cfg = DedupConfig(shuffle_partitions=8, algorithm=algorithm, keyspace_size=2**16)
+    DedupPipeline(spark, cfg).run(make_pages(n_docs=60, seed=3).to_spark(spark))
+    return re.sub(r"#\d+", "#", plans["marked"])
+
+
+# the naive marked stage: one min(struct) survivor+representative
+# aggregate and its join back, between the exact-pass and text joins
+NAIVE_MARKED_PLAN = """\
+Project [doc_key#L, cluster_id#L, norm_hash#L, url#, warc_ts#, lang#, quality#, is_exact_duplicate#, is_duplicate#, rep_url#, text#]
++- Join LeftOuter, (doc_key#L = doc_key#L)
+   :- Project [cluster_id#L, norm_hash#L, url#, warc_ts#, lang#, doc_key#L, quality#, is_exact_duplicate#, NOT (doc_key#L = _extract_dk#L) AS is_duplicate#, _extract_u# AS rep_url#]
+   :  +- Join Inner, (cluster_id#L = cluster_id#L)
+   :     :- Project [norm_hash#L, url#, warc_ts#, lang#, doc_key#L, quality#, is_exact_duplicate#, cluster_id#L]
+   :     :  +- Join Inner, (norm_hash#L = norm_hash#L)
+   :     :     :- Project [norm_hash#L, url#, warc_ts#, lang#, doc_key#L, quality#, NOT (doc_key#L = exact_survivor_key#L) AS is_exact_duplicate#]
+   :     :     :  +- Join Inner, (norm_hash#L = norm_hash#L)
+   :     :     :     :- LogicalRDD [url#, warc_ts#, lang#, doc_key#L, norm_hash#L, quality#], false
+   :     :     :     +- Aggregate [norm_hash#L], [norm_hash#L, min(struct(nq, -quality#, dk, doc_key#L)).dk AS exact_survivor_key#L]
+   :     :     :        +- Project [doc_key#L, norm_hash#L, quality#]
+   :     :     :           +- LogicalRDD [url#, warc_ts#, lang#, doc_key#L, norm_hash#L, quality#], false
+   :     :     +- Project [norm_hash#L, cluster_id#L]
+   :     :        +- LogicalRDD [norm_hash#L, fam_count#L, fam_tb#L, minhash#, simhash#L, win_hashes#, cluster_id#L], false
+   :     +- Project [cluster_id#L, best#.dk AS _extract_dk#L, best#.u AS _extract_u#]
+   :        +- Aggregate [cluster_id#L], [cluster_id#L, min(struct(nq, -quality#, dk, doc_key#L, u, url#)) AS best#]
+   :           +- Project [url#, doc_key#L, quality#, cluster_id#L]
+   :              +- Join Inner, (norm_hash#L = norm_hash#L)
+   :                 :- Project [norm_hash#L, url#, doc_key#L, quality#]
+   :                 :  +- Join Inner, (norm_hash#L = norm_hash#L)
+   :                 :     :- Project [url#, doc_key#L, norm_hash#L, quality#]
+   :                 :     :  +- LogicalRDD [url#, warc_ts#, lang#, doc_key#L, norm_hash#L, quality#], false
+   :                 :     +- Aggregate [norm_hash#L], [norm_hash#L]
+   :                 :        +- Project [norm_hash#L]
+   :                 :           +- LogicalRDD [url#, warc_ts#, lang#, doc_key#L, norm_hash#L, quality#], false
+   :                 +- Project [norm_hash#L, cluster_id#L]
+   :                    +- LogicalRDD [norm_hash#L, fam_count#L, fam_tb#L, minhash#, simhash#L, win_hashes#, cluster_id#L], false
+   +- Aggregate [doc_key#L], [doc_key#L, min(text#) AS text#]
+      +- LocalRelation [text#, doc_key#L]
+"""
+
+
+def test_naive_marked_plan_is_unchanged(spark, monkeypatch):
+    assert _marked_plan(spark, monkeypatch, "naive") == NAIVE_MARKED_PLAN
+
+
+def test_estimator_marked_plan_ranks_twice(spark, monkeypatch):
+    # one bucketed rank for the families' +1 extras, one for the docs'
+    # survivors; the representative never re-reads either
+    plan = _marked_plan(spark, monkeypatch, "weighted_average2")
+    assert len(re.findall(r"Window \[row_number\(\)", plan)) == 2, plan

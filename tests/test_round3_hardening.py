@@ -4,8 +4,9 @@
   exactly the same n_keep as a brute-force per-cluster oracle (estimate ->
   apportion -> +1 to the n_extra smallest by (fam_tb, norm_hash)), while
   its plan never ranks over a raw (cluster_id, fam_count) window — the
-  rank is split across contiguous fam_tb range buckets so one hot
-  equal-count cluster cannot become a single sorting task.
+  rank (``rank_in_buckets``) is split across contiguous fam_tb range
+  buckets so one hot equal-count cluster cannot become a single sorting
+  task.
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def test_survivor_counts_hot_equal_count_cluster(spark):
     plan = got_df._jdf.queryExecution().optimizedPlan().toString()
     for line in plan.splitlines():
         if "row_number()" in line:
-            assert "rb#" in line, f"rank window not range-bucketed: {line}"
+            assert "_bucket0#" in line, f"rank window not range-bucketed: {line}"
 
 
 @pytest.mark.parametrize("algorithm", ["naive", "weighted_average", "weighted_average2"])
@@ -102,10 +103,9 @@ def test_survivor_counts_randomized_vs_oracle(spark, algorithm):
 
 
 def test_fused_survivor_rep_equals_two_step(spark):
-    """mark_survivors_and_rep == mark_survivors -> attach_rep_url on the
-    naive path: the survivor IS the representative, and appending url to
-    the (already total) (-quality, doc_key) min-struct order cannot change
-    the chosen row."""
+    """mark_survivors_and_rep == mark_survivors(n_keep=1) -> attach_rep_url
+    on the naive path: the fused min-struct survivor equals the bucketed
+    rank's first doc, and the survivor IS the representative."""
     from pyspark.sql import functions as F
 
     from umi_dedup_spark.operators.representative import (
@@ -130,7 +130,9 @@ def test_fused_survivor_rep_equals_two_step(spark):
     fused = {tuple(r) for r in mark_survivors_and_rep(df).select(*cols).collect()}
     two_step = {
         tuple(r)
-        for r in attach_rep_url(mark_survivors(df)).select(*cols).collect()
+        for r in attach_rep_url(
+            mark_survivors(df.withColumn("n_keep", F.lit(1)), "n_keep")
+        ).select(*cols).collect()
     }
     assert fused == two_step
 
@@ -180,15 +182,27 @@ def test_mark_survivors_nkeep_bucketed_vs_bruteforce(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     for line in plan.splitlines():
         if "row_number()" in line:
-            assert "_kb#" in line, f"rank window not range-bucketed: {line}"
+            assert "_bucket1#" in line, f"rank window not range-bucketed: {line}"
 
 
-def test_survivor_counts_n_extra_zero_skips_window(spark):
+def test_survivor_counts_n_extra_zero_skips_window(spark, monkeypatch):
     """A cluster that apportions evenly (naive: every family keeps 1) takes
     the no-window branch; results still exact."""
+    import umi_dedup_spark.operators.estimators as est
+
+    ranked_inputs = []
+    rank = est.rank_in_buckets
+
+    def spy(df, *args):
+        ranked_inputs.append(df)
+        return rank(df, *args)
+
+    monkeypatch.setattr(est, "rank_in_buckets", spy)
     rows = [(1, i, 2, i * 17 % 1000 - 500) for i in range(50)]
     got_df = _run_and_compare(spark, rows, algorithm="naive")
     plan = got_df._jdf.queryExecution().optimizedPlan().toString()
     assert "row_number" in plan  # branch exists in the plan ...
     # ... but the data all flows through the n_extra==0 projection: every
-    # n_keep is exactly 1 and the ranked branch returns no rows
+    # n_keep is exactly 1 and the ranked branch gets no rows
+    assert len(ranked_inputs) == 1
+    assert ranked_inputs[0].count() == 0

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.operators.representative import range_bucket
+from umi_dedup_spark.operators.representative import rank_in_buckets, range_bucket
 
 
 # ---------------------------------------------------------------- E5
@@ -440,7 +440,8 @@ def survivor_spec(
 
     Plan shape: groupBy(cluster_id, fam_count) pre-aggregation (map-side
     combine) -> applyInPandas over the tiny histogram. The result is lazy:
-    ``cluster_survivor_counts`` reads it in three branches, so a caller
+    ``cluster_survivor_counts`` reads it three times (the even groups,
+    and the ranked groups' rows and bucket counts), so a caller
     that wants the estimator to run once materializes it first (the
     pipeline's ``survivor_spec`` stage does).
     """
@@ -474,65 +475,32 @@ def cluster_survivor_counts(
     reference's own choice is set-iteration order, i.e. arbitrary —
     documented variant).
 
-    Skew-safe rank: no window ever partitions by raw (cluster_id,
-    fam_count). At production scale fam_tb is a min-of-xxhash64 (uniform
-    int64 — prepare_docs hashes url/warc_ts when no ingest id exists), so
-    its ``n_range_buckets`` contiguous ranges split a hot group into
-    balanced slices while PRESERVING sort order (equal fam_tb -> same
-    bucket); with sequential ingest doc_ids the buckets collapse to one
-    (still exact, just unbalanced — identical to the pre-bucketed plan);
-    global rank = per-bucket row_number + per-bucket prefix offset from a
-    tiny (<= n_range_buckets rows/group) aggregate. Rows that cannot
-    receive a +1 (n_extra == 0, or their whole bucket sits past n_extra)
-    bypass the window entirely.
+    Skew-safe rank: `rank_in_buckets` over ``n_range_buckets`` contiguous
+    fam_tb ranges, so no window partitions by a raw (cluster_id,
+    fam_count) group. At production scale fam_tb is a min-of-xxhash64
+    (uniform int64 — prepare_docs hashes url/warc_ts when no ingest id
+    exists), so the ranges split a hot group into balanced slices; with
+    sequential ingest doc_ids the buckets collapse to one (still exact,
+    just unbalanced). Groups that apportioned evenly (n_extra == 0) keep
+    keep_base and bypass the rank entirely.
     """
-    from pyspark.sql import Window
-
     joined = (
         clustered_fams.select("cluster_id", "norm_hash", "fam_count", "fam_tb")
         .join(spec.select("cluster_id", "fam_count", "keep_base", "n_extra"),
               ["cluster_id", "fam_count"])
     )
-    out_cols = ["cluster_id", "norm_hash", "fam_count", "n_keep"]
-
-    # groups that apportioned evenly: every member keeps keep_base, no rank
+    key = ["cluster_id", "norm_hash", "fam_count"]
     zero = joined.filter(F.col("n_extra") == 0).select(
-        "cluster_id", "norm_hash", "fam_count",
-        F.col("keep_base").alias("n_keep"),
+        *key, F.col("keep_base").alias("n_keep")
     )
-
-    extra = joined.filter(F.col("n_extra") > 0).withColumn(
-        "rb", range_bucket("fam_tb", n_range_buckets)
+    ranked = rank_in_buckets(
+        joined.filter(F.col("n_extra") > 0),
+        ["cluster_id", "fam_count"],
+        [range_bucket("fam_tb", n_range_buckets)],
+        ["fam_tb", "norm_hash"],
+    ).select(
+        *key,
+        (F.col("keep_base") + (F.col("_rank") <= F.col("n_extra")).cast("long"))
+        .alias("n_keep"),
     )
-    bucket_counts = extra.groupBy("cluster_id", "fam_count", "rb").agg(
-        F.count(F.lit(1)).alias("bc")
-    )
-    w_off = (
-        Window.partitionBy("cluster_id", "fam_count")
-        .orderBy("rb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bucket_counts.withColumn(
-        "off", F.coalesce(F.sum("bc").over(w_off), F.lit(0))
-    ).select("cluster_id", "fam_count", "rb", "off")
-
-    with_off = extra.join(offsets, ["cluster_id", "fam_count", "rb"])
-    # buckets entirely past the first n_extra rows can never get a +1
-    no_rank = with_off.filter(F.col("off") >= F.col("n_extra")).select(
-        "cluster_id", "norm_hash", "fam_count",
-        F.col("keep_base").alias("n_keep"),
-    )
-    w_rank = Window.partitionBy("cluster_id", "fam_count", "rb").orderBy(
-        F.asc("fam_tb"), F.asc("norm_hash")
-    )
-    ranked = (
-        with_off.filter(F.col("off") < F.col("n_extra"))
-        .withColumn("rn", F.row_number().over(w_rank))
-        .withColumn(
-            "n_keep",
-            F.col("keep_base")
-            + (F.col("off") + F.col("rn") <= F.col("n_extra")).cast("long"),
-        )
-        .select(*out_cols)
-    )
-    return zero.unionByName(no_rank).unionByName(ranked)
+    return zero.unionByName(ranked)

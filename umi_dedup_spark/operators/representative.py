@@ -13,9 +13,19 @@ Maps reference semantics:
 * E6 survivor selection (``lib/umi_data.py:137-146``): within each merged
   cluster, the lowest-quality records are the duplicates; we keep the
   ``n_keep`` best (quality desc, doc_key asc) and flag the rest.
+
+Two skew-safe ranking mechanisms, and no window ever sorts a whole group:
+* rank 1 (the naive survivor and every ``rep_url``) is one
+  ``min(struct(-quality, doc_key, url))`` aggregation, map-side combined,
+  plus a join back (`_best_doc`);
+* rank n (`mark_survivors`, and the estimators' +1 extras) is
+  `rank_in_buckets`: a bucket's prefix offset from a small count table
+  plus a ``row_number`` inside the bucket.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -43,9 +53,45 @@ def range_bucket(col: str, n_buckets: int) -> Column:
     return F.shiftrightunsigned(F.col(col).bitwiseXOR(F.lit(_SIGN_BIT)), shift)
 
 
+def rank_in_buckets(
+    df: DataFrame,
+    partition_cols: Sequence[str],
+    bucket_cols: Sequence[Column],
+    order_cols: Sequence[str | Column],
+) -> DataFrame:
+    """``df`` plus ``_rank``: each row's 1-based rank inside its
+    ``partition_cols`` group, sorted by (``bucket_cols`` asc,
+    ``order_cols``).
+
+    ``bucket_cols`` must be an ascending, order-preserving prefix of that
+    sort: every row of an earlier bucket sorts before every row of a later
+    one. The rank is then exactly the bucket's prefix offset (a running
+    sum over a count table of one row per bucket) plus a ``row_number``
+    inside the bucket. The window partitions by the bucket, never by the
+    raw group, so a hot group's sort splits across its buckets (e.g. the
+    `range_bucket` slices of a hash-uniform key).
+    """
+    pc = list(partition_cols)
+    bc = [f"_bucket{i}" for i in range(len(bucket_cols))]
+    d = df.select("*", *(c.alias(name) for c, name in zip(bucket_cols, bc)))
+    earlier = (
+        Window.partitionBy(*pc)
+        .orderBy(*bc)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = d.groupBy(*pc, *bc).agg(F.count(F.lit(1)).alias("_n")).select(
+        *pc, *bc, F.coalesce(F.sum("_n").over(earlier), F.lit(0)).alias("_offset")
+    )
+    in_bucket = Window.partitionBy(*pc, *bc).orderBy(*order_cols)
+    return d.join(offsets, pc + bc).select(
+        *df.columns,
+        (F.col("_offset") + F.row_number().over(in_bucket)).alias("_rank"),
+    )
+
+
 def mark_survivors(
     docs_with_cluster: DataFrame,
-    n_keep_col: str | None = None,
+    n_keep_col: str,
     partition_cols: tuple[str, ...] = ("cluster_id",),
     n_range_buckets: int = 64,
 ) -> DataFrame:
@@ -54,88 +100,31 @@ def mark_survivors(
 
     Scope mapping (documented, SURVEY.md §2.6): ``naive`` keeps 1 per
     *cluster* — the post-relabel merged key, exactly the reference's naive
-    estimate applied after ``reduce_clusters``. Histogram estimators
-    apportion n_keep per member *family* (partition_cols =
-    (cluster_id, norm_hash)), i.e. the bundle = cluster, keys = families.
+    estimate applied after ``reduce_clusters`` (`mark_survivors_and_rep`).
+    Histogram estimators apportion n_keep per member *family*
+    (partition_cols = (cluster_id, norm_hash)), i.e. the bundle = cluster,
+    keys = families.
 
-    Both paths are skew-safe — NO window ever sorts a whole hot group in
-    one task:
-    * rank-1 (n_keep_col=None): ``min(struct)`` agg + join-back.
-    * n_keep>1: the global (quality desc, doc_key asc) rank decomposes
-      exactly into order-preserving buckets (exact quality value, then
-      ``n_range_buckets`` contiguous doc_key ranges) + per-bucket prefix
-      offsets from a tiny aggregate. A billion-copy family splits across
-      buckets (doc_key is hash-uniform at production scale); the distinct
-      quality count per family is small by construction (members share
-      norm_text — quality varies only through case/whitespace deltas of
-      the raw text). Whole buckets strictly before/after the n_keep
-      boundary skip ranking entirely: only the (at most one per quality
-      level) boundary bucket pays a row_number, bounded to ~group/buckets
-      rows.
+    The rank is `rank_in_buckets` over (exact quality value,
+    ``n_range_buckets`` contiguous doc_key ranges) buckets. A billion-copy
+    family splits across its doc_key ranges (doc_key is hash-uniform at
+    production scale); the distinct quality count per family is small by
+    construction (members share norm_text — quality varies only through
+    case/whitespace deltas of the raw text).
     """
-    if n_keep_col is None:
-        surv = docs_with_cluster.groupBy(*partition_cols).agg(
-            F.min(
-                F.struct(
-                    (-F.col("quality")).alias("nq"), F.col("doc_key").alias("dk")
-                )
-            ).alias("best")
-        ).select(*partition_cols, F.col("best.dk").alias("_surv_key"))
-        return (
-            docs_with_cluster.join(surv, list(partition_cols))
-            .withColumn("is_duplicate", F.col("doc_key") != F.col("_surv_key"))
-            .drop("_surv_key")
-        )
-
-    pc = list(partition_cols)
-    d = docs_with_cluster.withColumn(
-        "_kb", range_bucket("doc_key", n_range_buckets)
-    )
-    bcounts = d.groupBy(*pc, "quality", "_kb").agg(F.count(F.lit(1)).alias("_bc"))
-    w_off = (
-        Window.partitionBy(*pc)
-        .orderBy(F.desc("quality"), F.asc("_kb"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = bcounts.withColumn(
-        "_off", F.coalesce(F.sum("_bc").over(w_off), F.lit(0))
-    )
-    d2 = d.join(offs, pc + ["quality", "_kb"])
-    helper = ["_kb", "_off", "_bc"]
-
-    nk = F.col(n_keep_col)
-    all_dup = d2.filter(F.col("_off") >= nk).withColumn(
-        "is_duplicate", F.lit(True)
-    )
-    all_keep = d2.filter(F.col("_off") + F.col("_bc") <= nk).withColumn(
-        "is_duplicate", F.lit(False)
-    )
-    w_rank = Window.partitionBy(*pc, "quality", "_kb").orderBy(F.asc("doc_key"))
-    boundary = (
-        d2.filter((F.col("_off") < nk) & (F.col("_off") + F.col("_bc") > nk))
-        .withColumn("_rn", F.row_number().over(w_rank))
-        .withColumn("is_duplicate", F.col("_off") + F.col("_rn") > nk)
-        .drop("_rn")
-    )
-    return (
-        all_dup.unionByName(all_keep).unionByName(boundary).drop(*helper)
-    )
+    return rank_in_buckets(
+        docs_with_cluster,
+        partition_cols,
+        [-F.col("quality"), range_bucket("doc_key", n_range_buckets)],
+        ["doc_key"],
+    ).withColumn("is_duplicate", F.col("_rank") > F.col(n_keep_col)).drop("_rank")
 
 
-def mark_survivors_and_rep(
-    docs_with_cluster: DataFrame,
-    partition_cols: tuple[str, ...] = ("cluster_id",),
-) -> DataFrame:
-    """Fused naive path: in the 1-survivor-per-cluster rule the survivor
-    IS the representative, so ONE ``min(struct(-quality, doc_key, url))``
-    aggregation + ONE join back produces both ``is_duplicate`` and
-    ``rep_url`` — `mark_survivors` followed by `attach_rep_url` computes
-    the identical row twice ((−quality, doc_key) is already a total order,
-    appending url cannot change the min). Halves the agg+join count of
-    the marked stage, whose cost is scheduling-bound fixed overhead that
-    Amdahl-limits N→4N scaling.
-    """
-    surv = docs_with_cluster.groupBy(*partition_cols).agg(
+def _best_doc(docs: DataFrame, partition_cols: Sequence[str]) -> DataFrame:
+    """One row per group: ``best`` = its (quality desc, doc_key asc) first
+    doc as a ``(nq, dk, u)`` struct. (-quality, doc_key) is already a total
+    order, so appending url cannot change the chosen row."""
+    return docs.groupBy(*partition_cols).agg(
         F.min(
             F.struct(
                 (-F.col("quality")).alias("nq"),
@@ -144,33 +133,36 @@ def mark_survivors_and_rep(
             )
         ).alias("best")
     )
+
+
+def mark_survivors_and_rep(
+    docs_with_cluster: DataFrame,
+    partition_cols: tuple[str, ...] = ("cluster_id",),
+) -> DataFrame:
+    """Fused naive path: in the 1-survivor-per-cluster rule the survivor
+    IS the representative, so ONE `_best_doc` aggregation + ONE join back
+    produces both ``is_duplicate`` and ``rep_url``. Halves the agg+join
+    count of the marked stage, whose cost is scheduling-bound fixed
+    overhead that Amdahl-limits N→4N scaling.
+    """
     return (
-        docs_with_cluster.join(surv, list(partition_cols))
+        docs_with_cluster.join(
+            _best_doc(docs_with_cluster, partition_cols), list(partition_cols)
+        )
         .withColumn("is_duplicate", F.col("doc_key") != F.col("best.dk"))
         .withColumn("rep_url", F.col("best.u"))
         .drop("best")
     )
 
 
-def attach_rep_url(marked: DataFrame) -> DataFrame:
-    """Broadcast-style map-back: every doc gets the url of its cluster's
-    surviving representative (best (quality desc, doc_key asc) among the
-    non-duplicates). Rank-1 via ``min_by``-style struct aggregation —
-    map-side combine, no window sort over a hot cluster; the agg output is
-    <= one row per cluster, so Catalyst/AQE broadcasts the join when it
-    fits."""
-    reps = (
-        marked.filter(~F.col("is_duplicate"))
-        .groupBy("cluster_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("quality")).alias("nq"),
-                    F.col("doc_key").alias("dk"),
-                    F.col("url").alias("u"),
-                )
-            ).alias("best")
-        )
-        .select("cluster_id", F.col("best.u").alias("rep_url"))
+def attach_rep_url(docs: DataFrame) -> DataFrame:
+    """Every doc gets the url of its cluster's best (quality desc, doc_key
+    asc) doc. That doc is a survivor under every estimator: apportionment
+    keeps >= 1 doc per family, and the cluster's best doc is first in its
+    own family. So the aggregate reads the docs before marking. The agg
+    output is <= one row per cluster, so Catalyst/AQE broadcasts the join
+    when it fits."""
+    reps = _best_doc(docs, ["cluster_id"]).select(
+        "cluster_id", F.col("best.u").alias("rep_url")
     )
-    return marked.join(reps, "cluster_id", "left")
+    return docs.join(reps, "cluster_id", "left")

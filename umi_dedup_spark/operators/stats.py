@@ -40,13 +40,18 @@ def category_counts(marked_docs: DataFrame) -> DataFrame:
 
 def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
     """Per-partition row counts for a stage — the lineage/metrics rows the
-    north rule requires as first-class outputs."""
-    return (
+    north rule requires as first-class outputs. A stage with no rows gets
+    one row with ``rows`` = 0 and a null ``pid``, so it still shows it ran."""
+    per_pid = (
         df.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("stage", F.lit(stage))
-        .select("stage", "pid", "rows")
+    )
+    return (
+        df.sparkSession.range(1)
+        .select(F.lit(stage).alias("stage"))
+        .join(per_pid, F.lit(True), "left")
+        .select("stage", "pid", F.coalesce("rows", F.lit(0)).alias("rows"))
     )
 
 

@@ -276,7 +276,7 @@ class DedupPipeline:
         labels = timed("labels", build_labels, materialize=False)
 
         clustered = timed("clusters", lambda: cluster_table(fams, labels))
-        # three branches of cluster_survivor_counts read the estimator spec:
+        # cluster_survivor_counts reads the estimator spec three times:
         # materialize it so the pandas estimator runs once. Its own stage,
         # not nested in "marked": a job carries one stage description.
         if cfg.algorithm != "naive":
@@ -298,15 +298,15 @@ class DedupPipeline:
                 # fused survivor+representative: one agg+join, not two
                 marked = mark_survivors_and_rep(doc_clusters)
             else:
+                # the representative comes from the unmarked docs, so its
+                # aggregate never re-reads the survivor rank
                 n_keep = cluster_survivor_counts(clustered, spec).select(
                     "norm_hash", "n_keep"
                 )
-                marked = attach_rep_url(
-                    mark_survivors(
-                        doc_clusters.join(n_keep, "norm_hash"),
-                        "n_keep",
-                        partition_cols=("cluster_id", "norm_hash"),
-                    )
+                marked = mark_survivors(
+                    attach_rep_url(doc_clusters).join(n_keep, "norm_hash"),
+                    "n_keep",
+                    partition_cols=("cluster_id", "norm_hash"),
                 )
             # text side deduped by doc_key: the same document can appear
             # under one doc_key more than once (re-crawled url in inputs
