@@ -1444,42 +1444,38 @@ WA_KEYSPACE = 2**20  # config.DedupConfig.keyspace_size — |alphabet|^L analog
 
 
 def _survivor_counts(algorithm: str, alias: str):
-    """E2/E3 on the board (reference CLI default is weighted_average2,
-    ``/root/reference/dedup.py:18``): run the REAL estimator path
-    (operators/estimators.survivor_spec + cluster_survivor_counts — histogram
-    applyInPandas + apportion + rank join-back) per source-cluster over
-    the exact-family size histogram, then report the per-cluster survivor
-    total (= clamp(estimate, n_fams, total_docs) by count conservation,
-    reference ``lib/markdup_sam.py:159``)."""
+    """E2/E3 on the board (the reference CLI's default is
+    weighted_average2, ``dedup.py:18``): run the REAL estimator
+    (operators/estimators.survivor_spec — histogram applyInPandas +
+    apportion) per source-cluster over the exact-family size histogram,
+    then sum the spec per cluster. Apportionment conserves each cluster's
+    target, so sum(keep_base * n_fams + n_extra) is the survivor total
+    (= clamp(estimate, n_fams, total_docs), reference
+    ``lib/markdup_sam.py:159``) and the spec is read once: no rank, no
+    join back to the families."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
 
-        from umi_dedup_spark.operators.estimators import (
-            cluster_survivor_counts,
-            survivor_spec,
-        )
+        from umi_dedup_spark.operators.estimators import survivor_spec
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         fams = (
             docs.select(
                 F.expr(_h64("s", "source")).alias("cluster_id"),
                 F.expr(_h64("s", _norm("s", "text"))).alias("norm_hash"),
-                "doc_id",
             )
             .groupBy("cluster_id", "norm_hash")
+            .agg(F.count(F.lit(1)).alias("fam_count"))
+        )
+        return (
+            survivor_spec(fams, algorithm, WA_KEYSPACE)
+            .groupBy("cluster_id")
             .agg(
-                F.count(F.lit(1)).alias("fam_count"),
-                F.min("doc_id").alias("fam_tb"),
+                F.sum("n_fams").alias("n_fams"),
+                F.sum(F.col("fam_count") * F.col("n_fams")).alias("total_docs"),
+                F.sum(F.col("keep_base") * F.col("n_fams") + F.col("n_extra")).alias(alias),
             )
-        )
-        keep = cluster_survivor_counts(
-            fams, survivor_spec(fams, algorithm, WA_KEYSPACE)
-        )
-        return keep.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("n_fams"),
-            F.sum("fam_count").alias("total_docs"),
-            F.sum("n_keep").alias(alias),
         )
 
     return run

@@ -306,3 +306,12 @@ def test_estimator_marked_plan_ranks_twice(spark, monkeypatch):
     # survivors; the representative never re-reads either
     plan = _marked_plan(spark, monkeypatch, "weighted_average2")
     assert len(re.findall(r"Window \[row_number\(\)", plan)) == 2, plan
+
+
+def test_survivor_count_leaf_runs_the_estimator_once(spark):
+    # the board leaf sums the survivor spec per cluster: one pandas
+    # estimator evaluation, no rank window and no join back to families
+    leaf = entry_mod.queries()["wa2_survivor_counts"](spark, SF_DIR)
+    plan = leaf._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bFlatMapGroupsInPandas\b", plan)) == 1, plan
+    assert not re.search(r"\b(Window|Join)\b", plan), plan

@@ -153,6 +153,14 @@ def test_null_text_and_null_source(spark):
         _tset(docs), id_col="doc_id", group_col="source", threshold=0.5
     ))
     assert got == [(2, 3, 1.0)]
+    # no token at all (only null texts, or no docs): nothing to encode,
+    # so the probe declines the bitset path and no pair comes out
+    for rows in ([(1, "s", None), (2, "s", None)], []):
+        docs = _mk(spark, rows)
+        _assert_match(spark, docs)
+        assert _rows(jaccard_similarity_join(
+            _tset(docs), id_col="doc_id", group_col="source"
+        )) == []
 
 
 def test_null_token_falls_back_to_array_path(spark):
@@ -245,6 +253,20 @@ def test_bitset_build_side_sized_by_broadcast_threshold(spark, join_threshold):
         assert run(k + 1)[0] is False
     with join_threshold("-1"):
         assert run(k) == (False, set())
+
+
+def test_probe_jobs_on_driver_testdata(spark):
+    # building the join runs the bitset probe's jobs: the sample
+    # vocabulary, then one action for the full vocabulary that also
+    # counts the docs (5 jobs in this 8-partition session)
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    before = _job_ids(spark)
+    out = jaccard_similarity_join(
+        _tset(docs), id_col="doc_id", group_col="source", threshold=0.5
+    )
+    probe_jobs = _job_ids(spark) - before
+    assert "bit_count" in out._jdf.queryExecution().executedPlan().toString()
+    assert len(probe_jobs) <= 5, sorted(probe_jobs)
 
 
 def test_plan_has_no_quadratic_join(spark):

@@ -15,12 +15,16 @@ per-group survivor-count estimators and the apportionment step:
   semantics: proportional ideal, >=1 floor for nonzero counts, residual-
   driven +/-1 adjustment, sum conservation asserted.
 
-All are pure numpy functions over a group's count histogram — the Spark
-integration runs them per cluster inside ``applyInPandas``
-(embarrassingly parallel, no cross-group state). The "unobserved keyspace"
-term |alphabet|^L (``lib/umi_data.py:49-50``) is the ``keyspace`` arg —
-a config constant here, since 2^64 fingerprint space is meaningless
-(SURVEY.md §7 hard parts).
+E1-E4 have one implementation, ``estimate_from_hist``, a pure numpy
+function over a group's count histogram; ``estimate_*`` are one-line
+per-copy wrappers that histogram their counts and call it. E5 has the
+per-copy ``apportion`` and its histogram twin ``apportion_hist`` (two
+independent algorithms, property-tested against each other). The Spark
+integration runs the histogram functions per cluster inside
+``applyInPandas`` (embarrassingly parallel, no cross-group state). The
+"unobserved keyspace" term |alphabet|^L (``lib/umi_data.py:49-50``) is
+the ``keyspace`` arg — a config constant here, since 2^64 fingerprint
+space is meaningless (SURVEY.md §7 hard parts).
 
 The scope of one estimator call = one near-dup cluster (the merged parent
 key after relabeling, ``lib/markdup_sam.py:179-193``), histogram = exact-
@@ -104,26 +108,9 @@ def apportion(counts: list[int] | np.ndarray, target: int) -> np.ndarray:
     return result
 
 
-# ---------------------------------------------------------------- E1
-def estimate_naive(counts: np.ndarray, keyspace: int) -> int:
-    """One survivor per observed key."""
-    return int((np.asarray(counts) > 0).sum())
-
-
-# ---------------------------------------------------------------- E2
-def estimate_weighted_average(counts: np.ndarray, keyspace: int) -> int:
-    """Weighted average of n_observed and total, weighted by the
-    unobserved-keyspace size vs the number of singletons."""
-    counts = np.asarray(counts, dtype=np.int64)
-    nz = counts[counts > 0]
-    n_obs = len(nz)
-    total = int(nz.sum())
-    c0 = keyspace - n_obs
-    c1 = int((nz == 1).sum())
-    if c0 + c1 == 0:
-        return n_obs
-    return int(round((c0 * n_obs + c1 * total) / (c0 + c1)))
-
+# ------------------------------------------------------- E1-E4
+# Over the (count_value, n_keys) histogram: a hot cluster with 10^9
+# families of 3 distinct sizes is 3 rows, not 10^9 in one Python worker.
 
 def _div_round_half_even(num: int, den: int) -> int:
     """round(num / den) with Python's banker's rounding, in EXACT integer
@@ -139,35 +126,6 @@ def _div_round_half_even(num: int, den: int) -> int:
     return q + (q & 1)  # exact half: round to even
 
 
-# ---------------------------------------------------------------- E3
-def estimate_weighted_average2(counts: np.ndarray, keyspace: int) -> int:
-    """Each observed count value votes for truncating every count at
-    (itself + 1); votes weighted by the count-value frequencies including
-    the inferred zero class. All arithmetic is exact Python-int (the
-    accumulator and final rounding match the SQL oracle bit-for-bit at
-    any magnitude; below 2^53 this is value-identical to the previous
-    float accumulation, since every partial sum was an exact float)."""
-    counts = np.asarray(counts, dtype=np.int64)
-    nz = counts[counts > 0]
-    freq = Counter(int(c) for c in nz)
-    n_umi = keyspace
-    freq[0] = n_umi - len(nz)
-    values = sorted(freq)
-
-    weighted = 0
-    for ci, fi in freq.items():
-        n_seen = trunc_sum = 0
-        for cj in values:
-            if cj > ci:
-                break
-            n_seen += freq[cj]
-            trunc_sum += cj * freq[cj]
-        trunc_sum += (ci + 1) * (n_umi - n_seen)
-        weighted += fi * trunc_sum
-    return _div_round_half_even(weighted, n_umi)
-
-
-# ---------------------------------------------------------------- E4
 def _poisson_log_pmf(obs: np.ndarray, lam: np.ndarray) -> np.ndarray:
     """log P(obs | lam) matrix, shape (n_bins, k)."""
     lg = np.array([math.lgamma(x + 1) for x in obs])
@@ -204,62 +162,26 @@ def _fit_poisson_mixture(
     return pi, lam, bic
 
 
-def estimate_poisson_cluster(counts: np.ndarray, keyspace: int, kmax: int = 10) -> int:
-    """BIC-selected Poisson-mixture estimate of the number of distinct
-    molecules. Same decision structure as the reference's dedup_cluster:
-    shortcut if max count == 1; fall back to naive when the histogram has
-    <= 2 distinct values; clamp to [naive, total]."""
-    counts = np.asarray(counts, dtype=np.int64)
-    nz = counts[counts > 0]
-    if len(nz) == 0:
-        return 0
-    naive = len(nz)
-    total = int(nz.sum())
-    if nz.max() == 1:
-        return naive
-    hist = Counter(int(c) for c in nz)
-    hist[0] = keyspace - naive
-    obs = np.array(sorted(hist), dtype=np.float64)
-    freq = np.array([hist[int(o)] for o in obs], dtype=np.float64)
-    if len(obs) <= 2:
-        return naive
-
-    fits = [
-        _fit_poisson_mixture(freq, obs, k)
-        for k in range(1, min(kmax, len(obs)) + 1)
-    ]
-    pi, lam, _ = min(fits, key=lambda t: t[2])
-    rank = np.argsort(lam)  # component -> molecule-count rank (reference rule)
-    logp = _poisson_log_pmf(obs, lam) + np.log(np.maximum(pi, 1e-300))[None, :]
-    assign = logp.argmax(axis=1)
-    est = 0.0
-    for i in range(len(obs)):
-        if obs[i] == 0:
-            continue
-        est += float(rank[assign[i]]) * freq[i]
-    return int(min(max(round(est), naive), total))
-
-
-ESTIMATORS = {
-    "naive": estimate_naive,
-    "weighted_average": estimate_weighted_average,
-    "weighted_average2": estimate_weighted_average2,
-    "cluster": estimate_poisson_cluster,
-}
-
-
-# ------------------------------------------------- histogram-native path
-# The Spark integration feeds the estimators the (count_value, n_families)
-# histogram instead of one row per family: a hot cluster with 10^9
-# families of 3 distinct sizes is 3 histogram rows, not 10^9 pandas rows
-# in one Python worker. These functions are exactly equivalent to their
-# per-copy counterparts above (property-tested in test_estimators).
-
 def estimate_from_hist(
     values: np.ndarray, mults: np.ndarray, keyspace: int,
     algorithm: str = "naive", kmax: int = 10,
 ) -> int:
-    """Estimator dispatch over a count histogram (values all > 0)."""
+    """Survivor estimate of one group from its count histogram: mults[i]
+    keys were observed values[i] times (values all > 0).
+
+    * naive: one survivor per observed key.
+    * weighted_average: n_observed and total, weighted by the
+      unobserved-keyspace size vs the number of singletons.
+    * weighted_average2: each observed count value votes for truncating
+      every count at (itself + 1); votes weighted by the count-value
+      frequencies including the inferred zero class. All arithmetic is
+      exact Python-int, so the result matches the SQL oracle bit-for-bit
+      at any magnitude.
+    * cluster: BIC-selected Poisson-mixture estimate of the number of
+      distinct molecules. Same decision structure as the reference's
+      dedup_cluster: shortcut if max count == 1; fall back to naive when
+      the histogram has <= 2 distinct values; clamp to [naive, total].
+    """
     values = np.asarray(values, dtype=np.int64)
     mults = np.asarray(mults, dtype=np.int64)
     n_obs = int(mults.sum())
@@ -272,14 +194,11 @@ def estimate_from_hist(
         if c0 + c1 == 0:
             return n_obs
         return int(round((c0 * n_obs + c1 * total) / (c0 + c1)))
-    # weighted_average2 / cluster already operate on a frequency table
-    # internally — expand-free: rebuild their Counter from the histogram
     freq = Counter({int(v): int(m) for v, m in zip(values, mults) if m > 0})
+    freq[0] = keyspace - n_obs  # the inferred zero class
     if algorithm == "weighted_average2":
-        n_umi = keyspace
-        freq[0] = n_umi - n_obs
         vals = sorted(freq)
-        weighted = 0  # exact int, see _div_round_half_even
+        weighted = 0
         for ci, fi in freq.items():
             n_seen = trunc_sum = 0
             for cj in vals:
@@ -287,35 +206,58 @@ def estimate_from_hist(
                     break
                 n_seen += freq[cj]
                 trunc_sum += cj * freq[cj]
-            trunc_sum += (ci + 1) * (n_umi - n_seen)
+            trunc_sum += (ci + 1) * (keyspace - n_seen)
             weighted += fi * trunc_sum
-        return _div_round_half_even(weighted, n_umi)
+        return _div_round_half_even(weighted, keyspace)
     if algorithm == "cluster":
-        if n_obs == 0:
-            return 0
-        naive = n_obs
-        if int(values.max(initial=0)) == 1:
-            return naive
-        freq[0] = keyspace - naive
+        # <= 2 classes counting the zero class (an empty group included)
+        if len(freq) <= 2 or int(values.max()) == 1:
+            return n_obs
         obs = np.array(sorted(freq), dtype=np.float64)
         fr = np.array([freq[int(o)] for o in obs], dtype=np.float64)
-        if len(obs) <= 2:
-            return naive
         fits = [
             _fit_poisson_mixture(fr, obs, k)
             for k in range(1, min(kmax, len(obs)) + 1)
         ]
         pi, lam, _ = min(fits, key=lambda t: t[2])
-        rank = np.argsort(lam)
+        rank = np.argsort(lam)  # component -> molecule-count rank (reference rule)
         logp = _poisson_log_pmf(obs, lam) + np.log(np.maximum(pi, 1e-300))[None, :]
         assign = logp.argmax(axis=1)
-        est = 0.0
-        for i in range(len(obs)):
-            if obs[i] == 0:
-                continue
-            est += float(rank[assign[i]]) * fr[i]
-        return int(min(max(round(est), naive), total))
+        est = sum(
+            float(rank[assign[i]]) * fr[i] for i in range(len(obs)) if obs[i] != 0
+        )
+        return int(min(max(round(est), n_obs), total))
     raise ValueError(f"unknown algorithm {algorithm!r}")
+
+
+def _count_hist(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(values, mults) histogram of the nonzero entries of ``counts``."""
+    counts = np.asarray(counts, dtype=np.int64)
+    return np.unique(counts[counts > 0], return_counts=True)
+
+
+def estimate_naive(counts: np.ndarray, keyspace: int) -> int:
+    return estimate_from_hist(*_count_hist(counts), keyspace, "naive")
+
+
+def estimate_weighted_average(counts: np.ndarray, keyspace: int) -> int:
+    return estimate_from_hist(*_count_hist(counts), keyspace, "weighted_average")
+
+
+def estimate_weighted_average2(counts: np.ndarray, keyspace: int) -> int:
+    return estimate_from_hist(*_count_hist(counts), keyspace, "weighted_average2")
+
+
+def estimate_poisson_cluster(counts: np.ndarray, keyspace: int, kmax: int = 10) -> int:
+    return estimate_from_hist(*_count_hist(counts), keyspace, "cluster", kmax)
+
+
+ESTIMATORS = {
+    "naive": estimate_naive,
+    "weighted_average": estimate_weighted_average,
+    "weighted_average2": estimate_weighted_average2,
+    "cluster": estimate_poisson_cluster,
+}
 
 
 def apportion_hist(
@@ -332,18 +274,20 @@ def apportion_hist(
     the +1 is the caller's deterministic choice (the reference's own
     tie-break is set-iteration order, i.e. arbitrary — SURVEY.md §2.6).
 
-    Exactness argument: per-copy apportion bumps argmin-residual (shrinks
-    argmax) one copy at a time; copies sharing a count value share their
-    residual, so bumps round-robin across a value's copies level by level
-    (each bump raises only that copy's residual by 1). Simulating per
-    (value, level) batches with a heap keyed by the level-residual
-    reproduces the exact multiset of per-copy results; only the ordering
-    among *equal-residual distinct values* differs, which per-copy
-    np.argmin resolved by arbitrary input order anyway (documented
-    deterministic variant: value-ascending tie-break).
+    Exactness argument: copies sharing a count value share their
+    residual. Bumps: per-copy apportion bumps the ``gap`` smallest
+    (residual, value) copies once each (its comment proves no copy is
+    bumped twice), so one walk over the values in that order, giving each
+    min(mult, gap left) bumps, is the same multiset. Shrinks: per-copy
+    apportion shrinks argmax-residual one copy at a time, and one value
+    may absorb several levels, so the shrinks round-robin across a
+    value's copies level by level (each shrink lowers only that copy's
+    residual by 1); a heap over (value, level) batches keyed by the
+    level-residual reproduces the exact multiset. Only the ordering among
+    *equal-residual distinct values* differs, which per-copy np.argmin
+    resolved by arbitrary input order anyway (documented deterministic
+    variant: value-ascending tie-break).
     """
-    import heapq
-
     values = np.asarray(values, dtype=np.int64)
     mults = np.asarray(mults, dtype=np.int64)
     if np.any(values <= 0) or np.any(mults <= 0):
@@ -363,21 +307,16 @@ def apportion_hist(
     shrinks = np.zeros_like(mults)  # total -1s
 
     if gap > 0:
-        # cost of the next bump for value i = residual + (bumps // mults)
-        heap = [(float(residual[i]), int(values[i]), i) for i in range(len(values))]
-        heapq.heapify(heap)
-        while gap > 0:
-            _, _, i = heapq.heappop(heap)
-            avail = int(mults[i] - bumps[i] % mults[i])
-            take = min(avail, gap)
-            bumps[i] += take
-            gap -= take
-            heapq.heappush(
-                heap, (float(residual[i] + bumps[i] // mults[i]), int(values[i]), i)
-            )
+        for i in np.lexsort((values, residual)):
+            if gap == 0:
+                break
+            bumps[i] = min(int(mults[i]), gap)
+            gap -= int(bumps[i])
     elif gap < 0:
         # only copies with result > 1 may shrink; value i allows up to
         # (base[i] - 1) shrinks per copy. Max-residual first.
+        import heapq
+
         heap = [
             (-float(residual[i]), int(values[i]), i)
             for i in range(len(values))
@@ -417,10 +356,7 @@ def deduplicate_counts(
     """Estimate survivors then apportion across observed counts —
     the full E1-E5 chain for one group."""
     counts = np.asarray(counts, dtype=np.int64)
-    if algorithm == "cluster":
-        target = estimate_poisson_cluster(counts, keyspace, kmax)
-    else:
-        target = ESTIMATORS[algorithm](counts, keyspace)
+    target = estimate_from_hist(*_count_hist(counts), keyspace, algorithm, kmax)
     nz_mask = counts > 0
     target = int(min(max(target, int(nz_mask.sum())), int(counts.sum())))
     out = np.zeros_like(counts)
@@ -441,9 +377,11 @@ def survivor_spec(
     Plan shape: groupBy(cluster_id, fam_count) pre-aggregation (map-side
     combine) -> applyInPandas over the tiny histogram. The result is lazy:
     ``cluster_survivor_counts`` reads it three times (the even groups,
-    and the ranked groups' rows and bucket counts), so a caller
-    that wants the estimator to run once materializes it first (the
-    pipeline's ``survivor_spec`` stage does).
+    and the ranked groups' rows and bucket counts), so a caller that
+    wants the estimator to run once either materializes it first (the
+    pipeline's ``survivor_spec`` stage does) or reads it once: a
+    cluster's survivor total is sum(keep_base * n_fams + n_extra) over
+    its rows, with no rank (the board's survivor-count leaves).
     """
     hist = clustered_fams.groupBy("cluster_id", "fam_count").agg(
         F.count(F.lit(1)).alias("n_fams")

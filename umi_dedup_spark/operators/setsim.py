@@ -70,7 +70,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from umi_dedup_spark.session import broadcast_row_cap, spread_small_scan
@@ -115,14 +115,16 @@ def _small_universe_vocab(base: DataFrame) -> list[str] | None:
     the path before any job runs. Otherwise the probe runs cheapest-first
     so general (large-vocab) data pays only a bounded sample scan: (1)
     vocabulary of a 2000-doc sample — real text exceeds
-    ``BITSET_VOCAB_CAP`` here and exits; (2) incremental doc-count check
-    against the rows that fit the broadcast threshold (CollectLimit scans
-    partitions incrementally, not the whole input); (3) the full
-    distinct-token scan, only when both cheap probes pass. The worst case
-    — a small sample vocabulary over a large full one — costs one
-    tokenize + distinct scan of the corpus (the limit cannot
-    short-circuit the aggregation) before the prefix path runs. A null
-    token has no bit of its own, so it disqualifies the bitset path too."""
+    ``BITSET_VOCAB_CAP`` here and exits; (2) one action for the rest: the
+    full distinct-token scan, with the doc count observed on its input.
+    The distinct's map side reads every row, so the count is complete
+    even though the collect stops at ``BITSET_VOCAB_CAP + 1`` tokens; too
+    many docs for the broadcast threshold declines. The worst case — a
+    small sample vocabulary over a large corpus or a large full
+    vocabulary — costs one tokenize + distinct scan of the corpus (the
+    limit cannot short-circuit the aggregation) before the prefix path
+    runs. A null token has no bit of its own, so it disqualifies the
+    bitset path too."""
     row_cap = broadcast_row_cap(base.sparkSession, BITSET_ROW_BYTES)
     if row_cap is None:
         return None
@@ -132,14 +134,19 @@ def _small_universe_vocab(base: DataFrame) -> list[str] | None:
     )
     if sample_vocab > BITSET_VOCAB_CAP:
         return None
-    if base.select("_id").limit(row_cap + 1).count() > row_cap:
-        return None
+    docs = Observation()
     rows = (
-        base.select(F.explode("_tset").alias("_tok"))
+        base.observe(docs, F.count(F.lit(1)).alias("n"))
+        .select(F.explode("_tset").alias("_tok"))
         .distinct().limit(BITSET_VOCAB_CAP + 1).collect()
     )
     toks = [r["_tok"] for r in rows]
-    if len(toks) > BITSET_VOCAB_CAP or None in toks:
+    # the doc count is read last: a plan the optimizer emptied (no token
+    # at all, so nothing to encode) never reports its observation
+    if (
+        not toks or len(toks) > BITSET_VOCAB_CAP or None in toks
+        or docs.get["n"] > row_cap
+    ):
         return None
     return sorted(toks)
 

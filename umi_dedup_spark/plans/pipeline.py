@@ -303,10 +303,15 @@ class DedupPipeline:
                 n_keep = cluster_survivor_counts(clustered, spec).select(
                     "norm_hash", "n_keep"
                 )
+                reps = attach_rep_url(doc_clusters)
                 marked = mark_survivors(
-                    attach_rep_url(doc_clusters).join(n_keep, "norm_hash"),
+                    reps.join(n_keep, "norm_hash"),
                     "n_keep",
                     partition_cols=("cluster_id", "norm_hash"),
+                )
+                # the naive branch's columns, in its order (n_keep drops)
+                marked = marked.select(
+                    *reps.drop("rep_url").columns, "is_duplicate", "rep_url"
                 )
             # text side deduped by doc_key: the same document can appear
             # under one doc_key more than once (re-crawled url in inputs
