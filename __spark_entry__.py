@@ -7,8 +7,11 @@ logical definition via a tiny dialect layer, so the two sides cannot
 drift: identical aliases, identical arithmetic (md5-hex -> int64 hashing,
 mod-(2^31-1) MinHash permutations, integer-safe rolling fingerprints).
 
-Non-SQL-expressible ops (the full LSH/CC pipeline, SimHash pandas UDFs,
-substring pass) are exposed as rows-only queries (no oracle entry).
+Operators that are not plain SQL (the flagship LSH/CC pipeline, the
+SimHash kernel, the set-similarity join, the similarity top-k paths,
+decontamination, the estimators) run as the real operator on the Spark
+side, each checked against a DuckDB mirror of its semantics: every
+query has an oracle entry.
 """
 
 from __future__ import annotations
@@ -1051,8 +1054,9 @@ SQL_QUERIES: dict[str, Callable[[str], str]] = {
 
 
 # --------------------------------------------------------------------
-# rows-only queries (non-SQL-expressible: pandas-UDF fingerprints,
-# LSH + CC fixpoint, substring pass) — driver records rows-only check
+# operator queries: the real operators (pandas-UDF fingerprints, LSH +
+# CC fixpoint, set-similarity join, ...) on the Spark side, each with a
+# DuckDB mirror in OPERATOR_ORACLES
 # --------------------------------------------------------------------
 def _register(spark: SparkSession, sf_dir: str) -> None:
     # NB (r6): spreading the one-row-group documents scan across task
@@ -1141,11 +1145,6 @@ def _ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(queries, emb, k=5)
 
 
-# every query is oracle-backed as of round 3: the flagship pipeline and
-# the 64-bit kernel fingerprints gained end-to-end DuckDB mirrors when
-# the kernel token hash became the dialect h64 (q_flagship_pipeline).
-ROWS_ONLY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
 def _paired_umi_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL paired operator on the Spark side (S8/J2 + combined-key
     extraction); oracle = q_paired_umi_counts."""
@@ -1182,9 +1181,10 @@ def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umi_dedup_spark.session import spread_small_scan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # spread the RAW rows (r6): the tokenization projection below is the
-    # per-row cost of every consumer inside the join operator, and on a
-    # one-row-group parquet input it would run on a single core
+    # spread the read, before the tokenization projection: that
+    # projection is the per-row cost of every consumer inside the join
+    # operator, which uses this layout as given, and on a one-row-group
+    # parquet input it would run on a single core
     docs = spread_small_scan(docs)
     tset = docs.select(
         "doc_id",
@@ -1625,7 +1625,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         name: _run_sql(name) for name in SQL_QUERIES
     }
     out.update(OPERATOR_QUERIES)
-    out.update(ROWS_ONLY)
     return out
 
 

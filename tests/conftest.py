@@ -29,3 +29,17 @@ def join_threshold(spark):
             spark.conf.set(key, old)
 
     return set_to
+
+
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids()``: the ids of every job the session has run so far
+    (read from the status store once the listener bus is drained)."""
+
+    def ids() -> set[int]:
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty(60_000)
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    return ids

@@ -79,10 +79,12 @@ def test_sql_query_matches_oracle(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
 
 
-def test_no_rows_only_queries():
-    # every query is oracle-backed (round 3); a future rows-only query
-    # must re-add the per-query execution check that lived here
-    assert entry_mod.ROWS_ONLY == {}
+def test_every_query_has_an_oracle():
+    # the parametrized oracle comparison above covers every query only
+    # while the two tables name the same queries
+    names = set(entry_mod.queries())
+    assert names == set(entry_mod.oracle_sql())
+    assert len(names) == 39
 
 
 def test_entry_smoke(spark):

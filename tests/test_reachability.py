@@ -3,9 +3,12 @@ outside its own body by code that is not a test.
 
 The scan parses every ``.py`` file of the repository except the test
 trees and dot-directories, and counts a name as referenced when it
-appears as a ``Name``, an ``Attribute``, an import alias or a string
-constant that is an identifier (the benchmark harness wraps operators by
-name). A package function that only tests call belongs under ``tests/``.
+appears as a ``Name``, an ``Attribute`` or an import alias. A string
+constant that is an identifier counts only under ``perfbench/``, the
+harness that wraps operators by name; elsewhere such a string is a query
+key, a column or a label, and matching it to a function of the same name
+would hide an unreached function. A package function that only tests
+call belongs under ``tests/``.
 """
 
 from __future__ import annotations
@@ -34,7 +37,9 @@ def _sources(root: Path):
         yield parts, ast.parse(path.read_text(), str(path))
 
 
-def _names(node: ast.AST) -> set[str]:
+def _names(node: ast.AST, strings: bool) -> set[str]:
+    """Names ``node`` references; identifier-shaped string constants too
+    when ``strings``."""
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -43,7 +48,10 @@ def _names(node: ast.AST) -> set[str]:
             out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.add(n.name.rsplit(".", 1)[-1])
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+        elif (
+            strings and isinstance(n, ast.Constant)
+            and isinstance(n.value, str) and n.value.isidentifier()
+        ):
             out.add(n.value)
     return out
 
@@ -55,7 +63,7 @@ def unreached(root: Path = ROOT) -> list[str]:
     defs = []
     for parts, tree in _sources(root):
         for stmt in tree.body:
-            names = _names(stmt)
+            names = _names(stmt, strings=parts[0] == "perfbench")
             uses.update(names)
             if parts[0] == PACKAGE and isinstance(
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

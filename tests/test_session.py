@@ -5,9 +5,13 @@ across the task slots."""
 
 from __future__ import annotations
 
+import os
+import random
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from umi_dedup_spark import session
 from umi_dedup_spark.config import DedupConfig
@@ -129,6 +133,23 @@ def test_spread_small_scan_keeps_split_input(spark, extra):
     assert _n_exchanges(out) == 0
 
 
-def test_spread_small_scan_keeps_streaming_input(spark, tmp_path):
-    stream = spark.readStream.schema("id long").parquet(str(tmp_path))
-    assert session.spread_small_scan(stream) is stream
+def test_spread_small_scan_spreads_megabytes_in_one_row_group(spark, tmp_path, job_ids):
+    # a one-row-group file larger than (slots - 1) x 256 KB: at Spark's
+    # default split sizes it reads as fewer splits than slots, and the
+    # spread widens it to every slot. A split floor that cut it into
+    # `slots` splits, one of them non-empty, would make the spread decline.
+    slots = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one_group.parquet")
+    rng = random.Random(7)
+    rows = 3_000
+    payload = [rng.randbytes(1_000) for _ in range(rows)]
+    pq.write_table(pa.table({"id": list(range(rows)), "payload": payload}), path)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert (slots - 1) << 18 < os.path.getsize(path) < (slots - 1) << 22
+    df = spark.read.parquet(path)
+    before = job_ids()
+    out = session.spread_small_scan(df)
+    assert job_ids() == before  # a plain read's partition count runs no job
+    nonempty = out.groupBy(F.spark_partition_id()).count().count()
+    assert nonempty == slots
+    assert sorted(r["id"] for r in out.select("id").collect()) == list(range(rows))

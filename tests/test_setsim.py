@@ -221,14 +221,7 @@ def test_bitset_path_properties(spark):
     assert _rows(out) == [(1, 2, 1.0)]
 
 
-def _job_ids(spark):
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(60_000)
-    jobs = sc.statusStore().jobsList(None)
-    return {jobs.apply(i).jobId() for i in range(jobs.size())}
-
-
-def test_bitset_build_side_sized_by_broadcast_threshold(spark, join_threshold):
+def test_bitset_build_side_sized_by_broadcast_threshold(spark, join_threshold, job_ids):
     # the bitset path engages while docs x BITSET_ROW_BYTES fits the
     # broadcast threshold; one doc more takes the prefix path, and a
     # negative threshold skips the probe without running a job
@@ -238,11 +231,11 @@ def test_bitset_build_side_sized_by_broadcast_threshold(spark, join_threshold):
     def run(n):
         docs = _mk(spark, rows[:n])
         want = _rows(_quadratic(spark, docs, 0.5))
-        before = _job_ids(spark)
+        before = job_ids()
         out = jaccard_similarity_join(
             _tset(docs), id_col="doc_id", group_col="source", threshold=0.5
         )
-        probe_jobs = _job_ids(spark) - before
+        probe_jobs = job_ids() - before
         assert _rows(out) == want, n
         plan = out._jdf.queryExecution().executedPlan().toString()
         return "bit_count" in plan, probe_jobs
@@ -255,18 +248,32 @@ def test_bitset_build_side_sized_by_broadcast_threshold(spark, join_threshold):
         assert run(k) == (False, set())
 
 
-def test_probe_jobs_on_driver_testdata(spark):
+def test_probe_jobs_on_driver_testdata(spark, job_ids):
     # building the join runs the bitset probe's jobs: the sample
     # vocabulary, then one action for the full vocabulary that also
     # counts the docs (5 jobs in this 8-partition session)
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    before = _job_ids(spark)
+    before = job_ids()
     out = jaccard_similarity_join(
         _tset(docs), id_col="doc_id", group_col="source", threshold=0.5
     )
-    probe_jobs = _job_ids(spark) - before
+    probe_jobs = job_ids() - before
     assert "bit_count" in out._jdf.queryExecution().executedPlan().toString()
     assert len(probe_jobs) <= 5, sorted(probe_jobs)
+
+
+def test_entry_query_construction_jobs(spark, job_ids):
+    # the entry query spreads its read once, and the join adds no spread
+    # of its own: a second partition-count read, over the spread input,
+    # would run its round-robin exchange as a job while the plan is built
+    # (8 jobs in this 8-slot session, source read included)
+    before = job_ids()
+    out = entry_mod.queries()["ngram_jaccard_pairs"](
+        spark, "/root/testdata/sf0.01"
+    )
+    built = job_ids() - before
+    assert "bit_count" in out._jdf.queryExecution().executedPlan().toString()
+    assert len(built) <= 8, sorted(built)
 
 
 def test_plan_has_no_quadratic_join(spark):

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from umi_dedup_spark.functions.text import normalize_text
+
 
 def _h64(col):
     """60-bit md5-prefix hash, identical to the dialect/oracle hash
@@ -44,7 +46,7 @@ def gram_hashes(text, k: int = 8):
     the same short-doc convention as the MinHash shingle kernel) so a
     verbatim short benchmark string still decontaminates.
     """
-    toks = F.split(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")), r"\s+")
+    toks = F.split(normalize_text(text), r"\s+")
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     grams = F.transform(starts, lambda i: _h64(F.array_join(F.slice(toks, i, k), " ")))
     return F.array_distinct(grams)

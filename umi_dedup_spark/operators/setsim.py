@@ -46,8 +46,8 @@ and the doc table fits the session's broadcast threshold (rows x
 set is encoded as a 64-bit mask (bit i = contains vocab[i]) and the
 exact intersection size per pair is ``bit_count(ma & mb)`` — O(1)
 instead of an O(|x|+|y|) string-hashing ``array_intersect``. Pair
-generation becomes a single BroadcastHashJoin on the group key probed
-by a round-robin-spread side: no shuffle of the pair stream, no
+generation becomes a single BroadcastHashJoin on the group key, probed
+by the input's own partitions: no shuffle of the pair stream, no
 per-group task skew (a 20-group corpus otherwise serializes into 20
 tasks), and no inverted-index explosion (on a dense small-vocab corpus
 the prefix index degenerates: every token is ultra-frequent, candidate
@@ -64,6 +64,12 @@ qualifying pairs): 156s prefix+quad union -> see OPTIMIZATION_r06.md.
 The two paths are chosen from the data and the broadcast threshold
 alone, and both are exact for every group size; the driver testdata has
 a 31-token vocabulary at every scale, so it runs the bitset path.
+
+The caller owns the input layout: the operator adds no exchange in front
+of its per-row work, and the vocabulary probes run on whatever layout
+the caller passes. A caller reading an unsplittable small file spreads
+it over the read (``session.spread_small_scan``), before the tokenizing
+projection, as ``__spark_entry__._ngram_jaccard`` does.
 """
 
 from __future__ import annotations
@@ -73,7 +79,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.session import broadcast_row_cap, spread_small_scan
+from umi_dedup_spark.session import broadcast_row_cap
 
 # conservative guard against float round-up at exact multiples: erring
 # DOWN lengthens the prefix (more candidates, never a missed pair)
@@ -188,8 +194,6 @@ def _bitset_join(
     # rows (id, group, size, one long) bounded by the broadcast threshold;
     # blocks are ContextCleaner-reclaimed with the result's lineage.
     enc = enc.localCheckpoint(eager=False)
-    # probe-side parallelism comes from jaccard_similarity_join's
-    # spread_small_scan on `base`, so no extra exchange here
     a = enc.select(
         *jk,
         F.col("_id").alias("a_id"),
@@ -284,6 +288,8 @@ def jaccard_similarity_join(
     Spark jobs while the plan is built, before the caller's action. A
     streaming ``docs`` raises ``ValueError`` (no output mode could run the
     plan anyway: it aggregates without a watermark and joins two streams).
+    ``docs`` is used in the partitioning it arrives in; spreading an
+    under-split input is the caller's step.
     """
     if docs.isStreaming:
         raise ValueError(
@@ -301,18 +307,7 @@ def jaccard_similarity_join(
     ).withColumn("_sz", F.size("_tset"))
     grp = ["_grp"] if gcols else []
 
-    # probes run on the UNSPREAD base: their limits stay cheap (a
-    # round-robin exchange would force the full shuffle under a limit),
-    # and they only read token/id columns
     vocab = _small_universe_vocab(base)
-
-    # per-row work above this point (mask encoding, prefix explode,
-    # verification) would run on one core for a one-row-group input.
-    # The tokens expression lives in the caller's projection, below this
-    # spread: callers with unsplittable small inputs should spread the
-    # raw rows before projecting (see __spark_entry__._ngram_jaccard).
-    base = spread_small_scan(base)
-
     if vocab is not None:
         return _bitset_join(base, vocab, grp, t)
     return _prefix_join(base, grp, t)

@@ -64,18 +64,6 @@ def count_histogram(fams: DataFrame, count_col: str = "fam_count") -> DataFrame:
     )
 
 
-def position_histogram(docs: DataFrame, text_col: str = "text", max_pos: int = 8) -> DataFrame:
-    """G6 (reference ``extract_umi.py:21,29``): per-position token
-    histogram over the first ``max_pos`` token positions — posexplode +
-    two-key groupBy, all JVM-side."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    return (
-        docs.select(F.posexplode(F.slice(toks, 1, max_pos)).alias("pos", "token"))
-        .groupBy("pos", "token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def lambert_w0(x: float, eps: float = 1e-9, max_iter: int = 200) -> float:
     """Principal branch of the Lambert W function by Newton's method —
     solves w * e^w = x. Valid for x >= -1/e."""

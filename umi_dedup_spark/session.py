@@ -2,6 +2,14 @@
 
 Local mode stands in for the multi-executor cluster; partitioning choices
 below are made for the cluster case (SURVEY.md §4).
+
+Scan parallelism has one mechanism, :func:`spread_small_scan`, applied
+once per input directly over its read. ``get_spark`` sets no
+``spark.sql.files.*`` option, so file scans split by Spark's defaults:
+split size min(128 MB, max(4 MB open cost, total bytes /
+``defaultParallelism``)). A parquet file written as one row group reads
+as one non-empty split however many splits it is cut into, so more
+splits cannot widen it; the spread does.
 """
 
 from __future__ import annotations
@@ -124,15 +132,6 @@ def _driver_java_opts(extra_conf: dict[str, str] | None, heap: str) -> str:
     return " ".join(parts)
 
 
-def _core_count() -> int:
-    """The session's task-slot count: $SPARK_GRAFT_CPUS when numeric,
-    else the host's CPU count (the ``local[*]`` resolution)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if cpus.isdigit():
-        return max(1, int(cpus))
-    return os.cpu_count() or 8
-
-
 def get_spark(
     app_name: str = "umi_dedup_spark",
     parallelism: int | None = None,
@@ -195,25 +194,6 @@ def get_spark(
         # to run, so with the id in the name an identical stage compiled
         # under a new number misses the cache (the id stays in a comment)
         .config("spark.sql.codegen.useIdInClassName", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Scan-parallelism floor (scale-adaptive, r6): a small parquet
-        # input (the 6MB documents table) packs into 1-2 splits at the
-        # 128MB default, so every scan that computes per-row work
-        # (normalize/hash/quality) runs on 1-2 of the session's cores
-        # while the rest idle — measured 3.4s of CPU on 2 tasks in the
-        # flagship docs stage. minPartitionNum floors the split count at
-        # the core count; openCostInBytes must drop below the 4MB default
-        # for the floor to bite on megabyte-sized files (split size =
-        # min(maxPartitionBytes, max(openCostInBytes, total/minPartitionNum))).
-        # At cluster scale total/minPartitionNum >> 128MB, so large scans
-        # keep the exact same 128MB splits — this only widens small ones.
-        # An unsplittable one-row-group file stays under-split whatever
-        # the floor; spread_small_scan below covers that case.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            str(parallelism if parallelism is not None else _core_count()),
-        )
-        .config("spark.sql.files.openCostInBytes", "262144")
         # Arrow batch cap bounds per-python-worker peak memory in the
         # fingerprint kernels (vectorized-across-rows numpy temporaries)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
@@ -237,24 +217,23 @@ def get_spark(
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Spread an under-split batch input across the session's task slots.
 
-    The second half of the scan-parallelism policy, after get_spark's
-    ``minPartitionNum`` split floor: a small parquet file written as ONE
-    row group cannot be split at all (every split past the row-group
-    start reads nothing), so all per-row work above the scan would run on
-    one core while the others idle. When ``df`` has fewer partitions than
-    ``defaultParallelism``, round-robin its rows across that many; at
-    scale the scan already yields at least that many partitions and
-    ``df`` comes back unchanged, so no bytes are shuffled. Streaming
-    inputs come back unchanged, and so does any input whose partition
-    count cannot be read.
+    A small parquet file written as ONE row group cannot be split (every
+    split past the row-group start reads nothing), so all per-row work
+    above the scan would run on one core while the others idle. When
+    ``df`` has fewer partitions than ``defaultParallelism``, round-robin
+    its rows across that many; at scale the scan already yields at least
+    that many partitions and ``df`` comes back unchanged, so no bytes are
+    shuffled.
+
+    Call it on a batch read plus narrow projections and filters, once per
+    input, before the per-row work. The partition count is read from the
+    plan's RDD, which executes any exchange below it: on such a plan this
+    runs jobs while the caller builds its plan. The job CLI's
+    ``--compact-snapshots`` input is one (``prepare_docs`` over
+    ``latest_snapshot`` runs one job there).
     """
-    if df.isStreaming:
-        return df
     slots = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
+    n = df.rdd.getNumPartitions()
     return df.repartition(slots) if n < slots else df
 
 
