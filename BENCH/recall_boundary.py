@@ -39,6 +39,7 @@ import numpy as np
 
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import (
+    MINHASH_SEED,
     minhash_signature,
     shingle_hashes,
     simhash64,
@@ -56,7 +57,7 @@ def pair_stats(docs, pairs):
     for r in docs.itertuples():
         h = shingle_hashes(r.text, CFG.shingle_k)
         sh[r.doc_id] = set(h)
-        sig[r.doc_id] = minhash_signature(h, CFG.num_perm, CFG.seed)
+        sig[r.doc_id] = minhash_signature(h, CFG.num_perm, MINHASH_SEED)
         sim[r.doc_id] = simhash64(h)
     out = []
     for p in pairs.itertuples():
@@ -113,7 +114,7 @@ def candidate_count(spark, docs_sdf, cfg):
     from umi_dedup_spark.functions.text import normalize_text
     from umi_dedup_spark.operators.lsh import add_band_hashes, candidate_pairs
 
-    fp = make_fingerprint_udf(cfg.shingle_k, cfg.num_perm, cfg.seed)
+    fp = make_fingerprint_udf(cfg.shingle_k, cfg.num_perm, MINHASH_SEED)
     fams = (
         docs_sdf.select(normalize_text(F.col("text")).alias("nt"))
         .select(F.xxhash64("nt").alias("norm_hash"), fp(F.col("nt")).alias("fp"))

@@ -43,7 +43,7 @@ STOP = {
 # dialect fragments: d == "s" (Spark SQL) | "d" (DuckDB)
 # --------------------------------------------------------------------
 def _norm(d: str, col: str) -> str:
-    """lowercase + collapse whitespace + trim (normalization key)."""
+    """lower() + collapse whitespace + trim (normalization key)."""
     if d == "s":
         return f"trim(regexp_replace(lower({col}), '\\\\s+', ' '))"
     return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
@@ -473,8 +473,8 @@ def q_substring_overlap_pairs(d: str) -> str:
     forward sliding min (fwd[j] = min(th[j..j+s-1])) -> anchor(i) iff
     max(fwd[i-s+1..i]) == th[i] (i is the argmin of some covering window)
     -> hash the T-token window at each anchor -> pairs sharing any window
-    hash. Dialect h64 replaces xxhash64; T/s mirror DedupConfig defaults
-    (substring_window_tokens=24, substring_anchor_stride=8)."""
+    hash. Dialect h64 replaces xxhash64; T/s mirror the engine's
+    constants (operators/suffix.py: WINDOW_TOKENS=24, ANCHOR_STRIDE=8)."""
     # Window-function formulation over exploded (doc_id, pos, token_hash)
     # rows: fwd[j] = min(th) over [j, j+s-1]; anchor(i) iff
     # max(fwd) over [i-s+1, i] == th[i]. No nested array lambdas — a
@@ -1116,12 +1116,12 @@ def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from umi_dedup_spark.config import DedupConfig
-    from umi_dedup_spark.functions.hashing import make_fingerprint_udf
+    from umi_dedup_spark.functions.hashing import MINHASH_SEED, make_fingerprint_udf
     from umi_dedup_spark.functions.text import normalize_text
 
     cfg = DedupConfig()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fp = make_fingerprint_udf(cfg.shingle_k, cfg.num_perm, cfg.seed)
+    fp = make_fingerprint_udf(cfg.shingle_k, cfg.num_perm, MINHASH_SEED)
     return docs.select(
         "doc_id",
         fp(normalize_text(F.col("text"))).alias("fp"),

@@ -18,10 +18,12 @@ from pyspark.sql import functions as F
 import oracle
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import (
+    MINHASH_SEED,
     minhash_signature,
     shingle_hashes,
     simhash64,
 )
+from umi_dedup_spark.operators.suffix import ANCHOR_STRIDE, WINDOW_TOKENS
 from umi_dedup_spark.plans.pipeline import DedupPipeline
 from umi_dedup_spark.synth import make_pages
 
@@ -42,7 +44,7 @@ def setup(spark):
     # rebuild the norm_hash -> norm_text map from the pages directly.
     from umi_dedup_spark.functions.text import normalize_text
 
-    norm = normalize_text(F.col("text"), CFG.lowercase, CFG.collapse_whitespace)
+    norm = normalize_text(F.col("text"))
     norm_map = {
         r["nh"]: r["nt"]
         for r in pages.select(
@@ -60,14 +62,14 @@ def setup(spark):
 
 def _oracle_assignment(fam_rows, cfg: DedupConfig):
     nodes, counts, tb, sims, sigs, grams = [], {}, {}, {}, {}, {}
-    run_len = cfg.substring_anchor_stride + cfg.substring_window_tokens
+    run_len = ANCHOR_STRIDE + WINDOW_TOKENS
     for r in fam_rows:
         n = r["norm_hash"]
         nodes.append(n)
         counts[n] = r["fam_count"]
         tb[n] = r["fam_tb"]
         h = shingle_hashes(r["norm_text"], cfg.shingle_k)
-        sigs[n] = minhash_signature(h, cfg.num_perm, cfg.seed)
+        sigs[n] = minhash_signature(h, cfg.num_perm, MINHASH_SEED)
         sims[n] = simhash64(h)
         toks = r["norm_text"].split()
         grams[n] = {

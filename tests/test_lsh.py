@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from umi_dedup_spark.config import DedupConfig
-from umi_dedup_spark.functions.hashing import make_fingerprint_udf
+from umi_dedup_spark.functions.hashing import MINHASH_SEED, make_fingerprint_udf
 from umi_dedup_spark.operators.lsh import add_band_hashes, candidate_pairs
 from umi_dedup_spark.plans.pipeline import DedupPipeline
 from umi_dedup_spark.synth import make_pages
@@ -23,7 +23,7 @@ def _fams(spark, texts, counts=None):
         rows, "norm_hash long, fam_count long, fam_tb long, norm_text string"
     )
     cfg = DedupConfig()
-    fp = make_fingerprint_udf(cfg.shingle_k, cfg.num_perm, cfg.seed)
+    fp = make_fingerprint_udf(cfg.shingle_k, cfg.num_perm, MINHASH_SEED)
     return df.withColumn("fp", fp("norm_text")).select(
         "norm_hash", "fam_count", "fam_tb", "norm_text",
         F.col("fp.minhash").alias("minhash"), F.col("fp.simhash").alias("simhash"),

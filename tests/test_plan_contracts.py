@@ -75,7 +75,7 @@ def test_prepare_docs_scan_prunes_unused_columns(spark, docs, tmp_path):
     pages_dir = str(tmp_path / "pages")
     documents_to_pages(docs).write.mode("overwrite").parquet(pages_dir)
     pq = spark.read.parquet(pages_dir)
-    out = prepare_docs(pq, DedupConfig()).select("doc_key", "norm_hash", "quality")
+    out = prepare_docs(pq).select("doc_key", "norm_hash", "quality")
     m = re.search(r"ReadSchema: (\S+)", _plan(out))
     assert m, "no ReadSchema in plan"
     read = m.group(1)
@@ -101,8 +101,7 @@ def test_exact_families_aggregates_partially(spark, docs):
 
     from umi_dedup_spark.synth import documents_to_pages
 
-    plan = _plan(exact_families(prepare_docs(documents_to_pages(docs),
-                                             DedupConfig())))
+    plan = _plan(exact_families(prepare_docs(documents_to_pages(docs))))
     assert "partial_count" in plan or "partial_first" in plan, plan
 
 

@@ -1,9 +1,7 @@
-"""Round-5 hardening: the four ADVICE r4 items.
+"""Round-5 hardening: ADVICE r4 items 2-4. (Item 1, a decontamination
+shuffle-join fallback behind a caller-supplied gram estimate, is gone
+with the estimate: no caller passed it, so every caller broadcasts.)
 
-1. decontaminate: broadcast is now decided by the caller's
-   ``bench_gram_estimate`` vs ``broadcast_threshold`` (the threshold used
-   to be compared against nothing); the shuffle path must produce the
-   identical result.
 2. jobs/dedup_job: --compact-snapshots without a warc_ts column warns
    instead of silently no-opping (CLI-level, covered by the stderr check
    in test_dedup_job_cli-style harness below).
@@ -18,37 +16,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.operators.decontaminate import ngram_contamination
 from umi_dedup_spark.operators.similarity import ivf_topk, semdedup_mark
 from umi_dedup_spark.operators.snapshot import latest_snapshot
-
-G8 = "a b c d e f g h"
-
-
-def test_decontaminate_shuffle_path_matches_broadcast(spark):
-    corpus = spark.createDataFrame(
-        [(1, f"intro {G8} outro"), (2, "totally unrelated words only here")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, f"{G8} benchmark continuation tokens")], "doc_id long, text string"
-    )
-    bcast = ngram_contamination(corpus, bench, k=8)
-    shuf = ngram_contamination(
-        corpus, bench, k=8, broadcast_threshold=10, bench_gram_estimate=1_000
-    )
-    assert sorted(map(tuple, bcast.collect())) == sorted(map(tuple, shuf.collect()))
-    # the big-estimate plan must NOT carry the broadcast hint (AQE may
-    # still pick broadcast at runtime from actual sizes — that's fine;
-    # the contract is that WE stop forcing it past the threshold)
-    plan = shuf._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" not in plan
-    # the small-estimate plan must force it
-    small = ngram_contamination(
-        corpus, bench, k=8, broadcast_threshold=10, bench_gram_estimate=5
-    )
-    plan = small._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" in plan
 
 
 def test_latest_snapshot_maptype_payload_raises(spark):
@@ -123,6 +92,7 @@ def test_boundary_pair_recall_at_default_config(spark):
     (BENCH/recall_boundary.py)."""
     from umi_dedup_spark.config import DedupConfig
     from umi_dedup_spark.functions.hashing import (
+        MINHASH_SEED,
         minhash_signature,
         shingle_hashes,
         simhash64,
@@ -138,7 +108,7 @@ def test_boundary_pair_recall_at_default_config(spark):
     for r in docs.itertuples():
         h = shingle_hashes(r.text, cfg.shingle_k)
         sh[r.doc_id] = set(h)
-        sig[r.doc_id] = minhash_signature(h, cfg.num_perm, cfg.seed)
+        sig[r.doc_id] = minhash_signature(h, cfg.num_perm, MINHASH_SEED)
         sim[r.doc_id] = simhash64(h)
     truth = []
     for p in pairs.itertuples():

@@ -8,9 +8,14 @@ import random
 from pyspark.sql import functions as F
 
 from umi_dedup_spark.config import DedupConfig
-from umi_dedup_spark.functions.hashing import make_fingerprint_udf
+from umi_dedup_spark.functions.hashing import MINHASH_SEED, make_fingerprint_udf
 from umi_dedup_spark.operators.lsh import candidate_pairs
-from umi_dedup_spark.operators.suffix import suffix_array_lcs, window_band_rows
+from umi_dedup_spark.operators.suffix import (
+    ANCHOR_STRIDE,
+    WINDOW_TOKENS,
+    suffix_array_lcs,
+    window_band_rows,
+)
 
 
 def test_lcs_basic():
@@ -48,8 +53,8 @@ def test_substring_pairs_shift_invariant(spark):
     # the pipeline's path (DedupPipeline.build_pairs): the fused
     # fingerprint UDF's win_hashes, substring band rows, candidate pairs
     fp_udf = make_fingerprint_udf(
-        cfg.shingle_k, cfg.num_perm, cfg.seed,
-        cfg.substring_window_tokens, cfg.substring_anchor_stride,
+        cfg.shingle_k, cfg.num_perm, MINHASH_SEED,
+        WINDOW_TOKENS, ANCHOR_STRIDE,
         cfg.fingerprint_max_tokens,
     )
     fams = _fam_df(spark, [a, b, c]).withColumn(

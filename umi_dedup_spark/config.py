@@ -4,6 +4,26 @@ The "identical shingle/signature config" knob set that dup-pair recall
 parity is defined over (SURVEY.md §7 M0). Mirrors the reference's CLI
 surface (``/root/reference/dedup.py:8-26``: algorithm, optical distance,
 truncation, kmax) re-expressed for text dedup.
+
+Twelve fields: shingling and signature length (``shingle_k``,
+``num_perm``), LSH banding (``lsh_bands``, ``lsh_rows``), the edge gate
+(``hamming_threshold``, ``jaccard_threshold``), the fingerprint input cap
+(``fingerprint_max_tokens``), the bucket cap (``max_bucket_families``),
+estimator selection (``algorithm``, ``kmax``, ``keyspace_size``) and
+``shuffle_partitions``, which the engine never reads. Every field is set
+by an entry point or a test (``tests/test_reachability.py`` keeps it so).
+
+Values no caller sets, and that the DuckDB oracles hard-code, are
+constants beside the code that reads them, not fields: a different value
+would not tune anything, it would break oracle parity.
+
+- ``functions.text.MIN_TEXT_CHARS`` (8): the usability filter's length;
+  ``normalize_text`` is always lower(), whitespace collapse and trim;
+- ``functions.hashing.MINHASH_SEED`` (42): the MinHash multipliers;
+- ``operators.suffix.WINDOW_TOKENS`` (24) and ``ANCHOR_STRIDE`` (8): the
+  substring pass's verbatim windows;
+- ``operators.cc.propagate_labels``' ``max_iters`` default (25): the CC
+  fixpoint bound.
 """
 
 from __future__ import annotations
@@ -13,13 +33,6 @@ from dataclasses import dataclass, field
 
 @dataclass(frozen=True)
 class DedupConfig:
-    # --- text normalization / usability filters (analog of
-    # alignment_is_good + umi_is_good, reference lib/parse_sam.py:5-6,
-    # lib/umi_data.py:7-10) ---
-    min_text_chars: int = 8          # drop docs shorter than this
-    lowercase: bool = True
-    collapse_whitespace: bool = True
-
     # --- shingling / fingerprints (analog of the UMI itself,
     # reference lib/umi_data.py:5) ---
     shingle_k: int = 5               # tokens per shingle
@@ -52,13 +65,6 @@ class DedupConfig:
                                      # edits diverge SimHash faster than
                                      # ACGT point errors diverge UMIs)
 
-    # --- substring ("suffix-array") pass: long verbatim overlaps
-    # (analog of the optical-duplicate second detector,
-    # reference lib/optical_duplicates.py). Content-anchored token
-    # windows: shared runs of ~anchor_stride+window tokens are caught. ---
-    substring_window_tokens: int = 24   # tokens per verbatim window
-    substring_anchor_stride: int = 8    # expected gap between anchors
-
     # --- fingerprint input cap ---
     # When set, every fingerprint (shingles -> MinHash/SimHash, winnowing
     # windows) is computed over only the FIRST N tokens of norm_text.
@@ -81,7 +87,6 @@ class DedupConfig:
 
     # --- skew / bucket control ---
     max_bucket_families: int = 512   # all-pairs cap per LSH bucket
-    cc_max_iters: int = 25           # label-propagation fixpoint bound
 
     # --- estimator selection (reference lib/markdup_sam.py:53-62;
     # CLI default weighted_average2, reference dedup.py:18) ---
@@ -92,7 +97,6 @@ class DedupConfig:
                                      # constant because 2^64 is meaningless here
 
     # --- misc ---
-    seed: int = 42
     # never read by the engine (get_spark and the job CLI set
     # spark.sql.shuffle.partitions); kept because benchmark workloads,
     # tests and scripts pass it and checkpoint manifests compare

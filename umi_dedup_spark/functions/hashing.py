@@ -167,6 +167,12 @@ def window_anchor_hashes(th: np.ndarray, s: int, T: int) -> np.ndarray:
     return np.unique(acc).view(np.int64)
 
 
+# Seed of the MinHash multipliers every caller uses; the flagship
+# oracle rebuilds the same multipliers from it
+# (``__spark_entry__._mh_consts``), so it is part of the dialect.
+MINHASH_SEED = 42
+
+
 @lru_cache(maxsize=8)
 def minhash_params(num_perm: int, seed: int) -> np.ndarray:
     """Seeded odd int64 multipliers. h_i(x) = (a_i * x) mod 2^64 with odd

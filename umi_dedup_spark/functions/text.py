@@ -14,28 +14,27 @@ from pyspark.sql import functions as F
 # Minimal public-domain stopword list (quality-score feature).
 STOPWORDS_EN = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
 
+# Docs shorter than this many characters are unusable and dropped; the
+# flagship oracle filters ``length(text) >= 8`` (``__spark_entry__.py``).
+MIN_TEXT_CHARS = 8
 
-def normalize_text(col: Column, lowercase: bool = True, collapse_ws: bool = True) -> Column:
+
+def normalize_text(col: Column) -> Column:
     """Normalization key before shingling — analog of the reference's
     soft-clip-corrected start position (``lib/parse_sam.py:25-26``): the
-    canonicalized value records group under.
+    canonicalized value records group under. Lowercase, collapse
+    whitespace runs to one space, trim: exactly the oracles' ``_norm``.
 
     NB: the raw ``text`` column is never modified (byte-identical-text
     invariant per url, BASELINE.json input_hint); this derives a new column.
     """
-    c = col
-    if lowercase:
-        c = F.lower(c)
-    if collapse_ws:
-        c = F.regexp_replace(c, r"\s+", " ")
-        c = F.trim(c)
-    return c
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def usable_filter(text: Column, min_chars: int) -> Column:
+def usable_filter(text: Column) -> Column:
     """Usability predicate — analog of ``alignment_is_good`` +
     min-length filter (``lib/parse_sam.py:5-6``, ``extract_umi.py:25-27``)."""
-    return text.isNotNull() & (F.length(text) >= min_chars)
+    return text.isNotNull() & (F.length(text) >= MIN_TEXT_CHARS)
 
 
 def punct_ratio(col: Column) -> Column:

@@ -19,7 +19,8 @@ import time
 from dataclasses import asdict
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import HASH_DIALECT
@@ -103,16 +104,20 @@ def write_table(
     stage: str,
     config: DedupConfig | None = None,
 ) -> int:
-    """Write a stage snapshot + manifest; returns row count written."""
+    """Write a stage snapshot + manifest; returns row count written.
+
+    The count rides the write job as an Observation, so the write runs
+    only the jobs a bare write does; it fires on empty and
+    zero-partition inputs too."""
     spark = df.sparkSession
     t0 = time.time()
-    writer = df.write.mode("overwrite")
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
     if _iceberg_available(spark) and not path_or_tbl.startswith("/"):
         writer.format("iceberg").saveAsTable(path_or_tbl)
-        n = spark.read.format("iceberg").load(path_or_tbl).count()
-        return n
+        return obs.get["rows"]
     writer.parquet(path_or_tbl)
-    n = spark.read.parquet(path_or_tbl).count()
+    n = obs.get["rows"]
     manifest = {
         "stage": stage,
         "rows": n,

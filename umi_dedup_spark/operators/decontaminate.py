@@ -11,11 +11,10 @@ lookup): membership of a derived key against a second, smaller table.
 Scale shape (100 TB corpus, ~GB benchmark):
 * Gram keys are 60-bit integer hashes (md5 prefix — the engine-wide
   dialect hash), so the join shuffles 8-byte keys, never gram text.
-* The benchmark gram set is tiny relative to the corpus — it is
-  broadcast (map-side hash semi-join, corpus side never shuffles) when
-  below ``broadcast_threshold`` distinct grams; above it the join falls
-  back to a shuffle hash/SMJ on the gram hash, which AQE skew-split
-  handles (boilerplate grams are the hot keys).
+* The benchmark gram set is tiny relative to the corpus — it is always
+  broadcast (map-side hash semi-join, corpus side never shuffles). The
+  hint is not sized from bytes; a benchmark whose gram set outgrows the
+  executors needs that check first (ROADMAP item 5).
 * Per-doc gram arrays are deduped (``array_distinct``) *before* the
   explode, so corpus-side rows are bounded by distinct grams per doc.
 * Output is one row per corpus doc (contamination evidence count), so
@@ -58,8 +57,6 @@ def ngram_contamination(
     k: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_threshold: int = 50_000_000,
-    bench_gram_estimate: int | None = None,
 ) -> DataFrame:
     """Per-document contamination report of ``docs`` against ``bench``.
 
@@ -67,13 +64,10 @@ def ngram_contamination(
     contaminated)`` where n_shared_grams counts DISTINCT grams of the
     document that occur anywhere in the benchmark set.
 
-    Join strategy: the benchmark gram set is broadcast unless the
-    caller's ``bench_gram_estimate`` (expected distinct benchmark grams;
-    no count job is issued — ``auto`` would cost a scan) exceeds
-    ``broadcast_threshold`` (50M 8-byte keys ~ 400 MB exec-side hash
-    set — fine on multi-GB executors; tune per cluster). With no
-    estimate the default is broadcast — benchmarks are small by nature —
-    and ``broadcast_threshold <= 0`` forces the shuffle join outright.
+    Join strategy: the benchmark gram set is the broadcast side, forced
+    by a hint. Benchmarks are small by nature, but a benchmark that is a
+    filter of a larger table is estimated, without statistics, at that
+    whole table's size, so the planner alone would shuffle both sides.
     """
     d_grams = docs.select(
         F.col(id_col), F.explode(gram_hashes(F.col(text_col), k)).alias("gh")
@@ -82,12 +76,8 @@ def ngram_contamination(
         bench.select(F.explode(gram_hashes(F.col(text_col), k)).alias("gh"))
         .distinct()
     )
-    if broadcast_threshold > 0 and (
-        bench_gram_estimate is None or bench_gram_estimate <= broadcast_threshold
-    ):
-        b_grams = F.broadcast(b_grams)
     hits = (
-        d_grams.join(b_grams, "gh")
+        d_grams.join(F.broadcast(b_grams), "gh")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
     )

@@ -14,12 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.text import normalize_text, quality_score, usable_filter
 from umi_dedup_spark.session import spread_small_scan
 
 
-def prepare_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+def prepare_docs(pages: DataFrame) -> DataFrame:
     """Filter usable pages and derive normalization + identity columns.
 
     Adds: doc_key (64-bit id), norm_text, norm_hash, quality.
@@ -32,7 +31,7 @@ def prepare_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     collision odds (documented; the final text join dedupes by doc_key so
     a collision cannot multiply output rows).
     """
-    usable = pages.filter(usable_filter(F.col("text"), cfg.min_text_chars))
+    usable = pages.filter(usable_filter(F.col("text")))
     # drop wide payload columns (html binary) immediately: every later
     # stage/checkpoint shuffles only what it needs (Catalyst prunes scans,
     # but explicit projection keeps checkpoints/shuffles narrow too)
@@ -43,7 +42,7 @@ def prepare_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     # work (measured at 50k docs: 3.5s wall == 3.9s total task time on
     # one core)
     usable = spread_small_scan(usable)
-    norm = normalize_text(F.col("text"), cfg.lowercase, cfg.collapse_whitespace)
+    norm = normalize_text(F.col("text"))
     if "doc_id" in pages.columns:
         key = F.col("doc_id").cast("long")
     elif "warc_ts" in pages.columns:
@@ -61,7 +60,7 @@ def prepare_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def exact_families(docs: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
+def exact_families(docs: DataFrame) -> DataFrame:
     """Collapse exact duplicates into families keyed by ``norm_hash``.
 
     Returns one row per family:
@@ -70,8 +69,7 @@ def exact_families(docs: DataFrame, cfg: DedupConfig | None = None) -> DataFrame
       norm_text of the representative member (normalized inline from
       ``text``; all members share it by construction).
     """
-    cfg = cfg or DedupConfig()
-    norm = normalize_text(F.col("text"), cfg.lowercase, cfg.collapse_whitespace)
+    norm = normalize_text(F.col("text"))
     return docs.groupBy("norm_hash").agg(
         F.count(F.lit(1)).alias("fam_count"),
         F.min("doc_key").alias("fam_tb"),

@@ -30,6 +30,15 @@ from pyspark.sql import functions as F
 # band_id marking substring-window buckets when unioned with LSH bands
 SUBSTRING_BAND_ID = 1_000_000
 
+# Verbatim windows (analog of the optical-duplicate second detector,
+# reference lib/optical_duplicates.py): WINDOW_TOKENS tokens per window,
+# anchored by winnowing with an expected gap of ANCHOR_STRIDE tokens, so
+# a shared run of ANCHOR_STRIDE + WINDOW_TOKENS - 1 tokens is always
+# caught. The substring oracles hard-code the same 24 and 8
+# (``__spark_entry__.q_substring_overlap_pairs``, ``q_flagship_pipeline``).
+WINDOW_TOKENS = 24
+ANCHOR_STRIDE = 8
+
 
 def window_band_rows(
     with_hashes: DataFrame, win_col: str = "win_hashes"

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from umi_dedup_spark import io as dio
 from umi_dedup_spark.config import DedupConfig
-from umi_dedup_spark.functions.hashing import make_fingerprint_udf
+from umi_dedup_spark.functions.hashing import MINHASH_SEED, make_fingerprint_udf
 from umi_dedup_spark.operators.cc import propagate_labels
 from umi_dedup_spark.operators.directional import build_edges
 from umi_dedup_spark.operators.estimators import cluster_survivor_counts, survivor_spec
@@ -49,7 +49,7 @@ from umi_dedup_spark.operators.exact import (
     prepare_docs,
 )
 from umi_dedup_spark.operators.lsh import add_band_hashes, candidate_pairs
-from umi_dedup_spark.operators.suffix import window_band_rows
+from umi_dedup_spark.operators.suffix import ANCHOR_STRIDE, WINDOW_TOKENS, window_band_rows
 from umi_dedup_spark.operators.representative import (
     attach_rep_url,
     cluster_table,
@@ -99,6 +99,10 @@ class DedupPipeline:
     def _stage(self, stage: str, df_fn, resume: bool, materialize: bool = True) -> DataFrame:
         """Run (or resume) a stage; snapshot when checkpointing.
 
+        Every stage that is materialized records its row count in
+        ``stage_rows``: observed on the checkpoint or the durable write,
+        or read from the manifest of a resumed snapshot.
+
         materialize=False: the stage feeds exactly one downstream consumer
         — return it lazily (no checkpoint, no eager count) so Spark fuses it
         into the consumer's job instead of a serial driver barrier. Only
@@ -106,11 +110,14 @@ class DedupPipeline:
         """
         path = self._ckpt_path(stage)
         if path and resume and dio.stage_complete(path, self.cfg):
+            self.stage_rows[stage] = dio.read_manifest(path)["rows"]
             self._stage_dfs[stage] = dio.read_table(self.spark, path)
             return self._stage_dfs[stage]
         df = df_fn()
         if path:
-            dio.write_table(df, path, stage=stage, config=self.cfg)
+            self.stage_rows[stage] = dio.write_table(
+                df, path, stage=stage, config=self.cfg
+            )
             df = dio.read_table(self.spark, path)
         elif materialize:
             # multi-consumer stage: materialize once so downstream stages
@@ -183,7 +190,7 @@ class DedupPipeline:
         # the final output join. It never sits in the cache and never
         # rides the survivor/cluster exchanges — payload bytes through
         # shuffles are what does not scale.
-        docs_full = prepare_docs(pages, cfg)
+        docs_full = prepare_docs(pages)
         # docs stays materialized: an interleaved A/B (r6, 4 pairs, one
         # session) measured the lazy variant LOSING — the marked stage's
         # two docs sub-consumers do not share an exchange in practice,
@@ -198,12 +205,12 @@ class DedupPipeline:
             # shuffled — the materialized family row is narrow (two hash
             # arrays + scalars).
             fp_udf = make_fingerprint_udf(
-                cfg.shingle_k, cfg.num_perm, cfg.seed,
-                cfg.substring_window_tokens, cfg.substring_anchor_stride,
+                cfg.shingle_k, cfg.num_perm, MINHASH_SEED,
+                WINDOW_TOKENS, ANCHOR_STRIDE,
                 cfg.fingerprint_max_tokens,
             )
             return (
-                exact_families(docs_full, cfg)
+                exact_families(docs_full)
                 .withColumn("fp", fp_udf(F.col("norm_text")))
                 .select(
                     "norm_hash",
@@ -267,7 +274,7 @@ class DedupPipeline:
             nodes = fams.select(
                 F.col("norm_hash").alias("fam"), "fam_count", "fam_tb"
             ).join(touched, "fam", "left_semi")
-            labels, iters = propagate_labels(nodes, edges, cfg.cc_max_iters)
+            labels, iters = propagate_labels(nodes, edges)
             self.cc_iterations = iters
             return labels
 
